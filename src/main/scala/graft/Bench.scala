@@ -124,7 +124,11 @@ object Bench {
    *  class runs FASTER at 8 cores at this SF, so that record would
    *  mis-gate every future 32-core run's 3x-stall and 1.5x-wave
    *  thresholds — the same poisoning class as the cross-SF landing the
-   *  r15 verdict flagged, new door. */
+   *  r15 verdict flagged, new door. A history file that EXISTS but cannot
+   *  be read (truncated, corrupt, unreadable) is a mismatch too: it
+   *  fails closed, neither gating this run nor being overwritten by it —
+   *  an empty prior would otherwise wave the landing through. Only an
+   *  absent file means "no history" (first run on a fresh checkout). */
   private[graft] def readHistory(histFile: String, sfDir: String,
                                  cpus: String): (Boolean, Map[String, Double]) =
     try {
@@ -152,8 +156,9 @@ object Bench {
         }.getOrElse(Map.empty))
       }
     } catch { case e: Throwable =>
-      System.err.println(s"[bench] could not read history $histFile: $e")
-      (false, Map.empty)
+      System.err.println(s"[bench] could not read history $histFile: $e — " +
+        "running without a history gate (and not landing over it)")
+      (true, Map.empty)
     }
 
   def main(args: Array[String]): Unit = {
@@ -592,7 +597,7 @@ object Bench {
       val veto: Option[String] =
         if (sys.env.get("SPARK_GRAFT_FORCE_LAND").contains("1")) None
         else if (historySfMismatch)
-          Some(s"existing history is for a different sf/cpus than this run")
+          Some(s"existing history is unreadable or for a different sf/cpus than this run")
         else if (hostDegraded) Some("host_degraded")
         else if (markerDrift > 1.15) Some(f"marker_drift $markerDrift%.3f > 1.15")
         else landingVeto(adjMap, history)

@@ -146,6 +146,26 @@ object VectorExpressions {
     }
     override def dataType: DataType = crankType
     override def nullable: Boolean = true
+    // a wrong crank/cv/cc (or v/vv) type must fail ANALYSIS, not reach
+    // nullSafeEval or the generated Java as a ClassCastException
+    override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
+      def vec(dt: DataType) = dt match {
+        case ArrayType(FloatType | DoubleType, _) => true
+        case _ => false
+      }
+      val centsOk = third.dataType match {
+        case ArrayType(StructType(Array(crank, cv, cc)), _) =>
+          Seq(IntegerType, LongType).contains(crank.dataType) &&
+            vec(cv.dataType) && cc.dataType == DoubleType
+        case _ => false
+      }
+      if (vec(first.dataType) && second.dataType == DoubleType && centsOk)
+        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
+      else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
+        "cell_argmin expects (array<float|double>, double, array<struct<crank: " +
+          "int|bigint, cv: array<float|double>, cc: double>>), got " +
+          Seq(first, second, third).map(_.dataType.simpleString).mkString("(", ", ", ")"))
+    }
     override protected def withNewChildrenInternal(
         f: Expression, s: Expression, t: Expression): Expression =
       copy(first = f, second = s, third = t)

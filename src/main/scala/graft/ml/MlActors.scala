@@ -438,6 +438,10 @@ class DedupActor extends Actor {
         // indexIsSignatures: true). After a rebase the stream docs ARE
         // the index, so future batches match them through the one-sided
         // index leg and the retained-leg cost resets to zero.
+        // The index side (indexView's signatures — computed here from text
+        // unless indexIsSignatures) is materialised ONCE, when the gate is
+        // built, before the first micro-batch, and held for the drain: no
+        // micro-batch re-reads or re-shingles indexView.
         // AvailableNow makes the step a bounded job; production runs the
         // same gate under a processing-time trigger.
         require(df.isStreaming,

@@ -532,9 +532,10 @@ object Similarity {
    *  tier.
    *
    *  The argmin is IN-ROW (r17): the centroid frame rides one broadcast
-   *  1-row array and each corpus row picks its cell by an in-row
-   *  array_sort over struct(dist, crank) — [[ivfProbeStateless]]'s
-   *  routing device at nprobe = 1. The previous [[rankCells]] form
+   *  1-row array and each corpus row picks its cell with the codegen'd
+   *  [[graft.functions.VectorExpressions.CellArgmin]] loop (min dist,
+   *  ties to the smaller crank) — [[ivfProbeStateless]]'s routing device
+   *  at nprobe = 1. The previous [[rankCells]] form
    *  shuffled corpus × K rows (each carrying the 64-double vector) into
    *  a per-id rank window just to keep one of the K — at corpus scale
    *  that is a K-times-corpus exchange for a map-side decision (guide

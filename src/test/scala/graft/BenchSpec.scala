@@ -145,6 +145,33 @@ class BenchSpec extends AnyFunSuite with Matchers {
     } finally f.delete()
   }
 
+  test("a truncated or corrupt history fails closed: no gate, no landing over it") {
+    // replay of an interrupted landing: the record is cut mid-write. An
+    // empty prior must not read as "no history" (that lands over it)
+    val f = java.io.File.createTempFile("bench-hist-trunc", ".json")
+    try {
+      val whole = """{"sf":"testdata/sf0.1","jvm":{"cpus":"4"},
+           "queries":{"d26_resolution_update":3.06,"q3_distinct":0.2}}"""
+      java.nio.file.Files.write(f.toPath, whole.take(whole.length / 2)
+        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      val (mismatch, hist) = Bench.readHistory(f.getPath, "testdata/sf0.1", "4")
+      mismatch shouldBe true
+      hist shouldBe empty
+      // non-JSON bytes fail closed the same way
+      java.nio.file.Files.write(f.toPath, Array[Byte](0, -1, 42, 10))
+      Bench.readHistory(f.getPath, "testdata/sf0.1", "4") shouldBe ((true, Map.empty))
+      // the whole record reads and gates normally
+      java.nio.file.Files.write(f.toPath,
+        whole.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      val (ok, full) = Bench.readHistory(f.getPath, "testdata/sf0.1", "4")
+      ok shouldBe false
+      full("q3_distinct") shouldBe 0.2
+    } finally f.delete()
+    // an absent file is the one "no history" case
+    Bench.readHistory("no-such-dir/bench-history.json", "testdata/sf0.1", "4") shouldBe
+      ((false, Map.empty))
+  }
+
   test("marker reference levels derive from the history, literals only as fallback") {
     // with a committed history, every panel member's reference IS that
     // history's value — the hard-coded literal is dead weight there, so

@@ -363,6 +363,31 @@ class MlSpec extends SparkSpec {
     gotL shouldBe got
   }
 
+  test("cell_argmin rejects wrong crank / cv / cc / v / vv types at analysis") {
+    implicit val s = spark
+    import s.implicits._
+    val row = Seq((Seq(1.0, 0.0), 1.0)).toDF("v", "vv")
+    type C = org.apache.spark.sql.Column
+    def cents(crank: C, cv: C, cc: C) =
+      array(struct(crank.as("crank"), cv.as("cv"), cc.as("cc")))
+    val good = cents(lit(1), array(lit(1.0), lit(0.0)), lit(1.0))
+    row.select(graft.functions.VectorExpressions
+      .cellArgmin(col("v"), col("vv"), good)).head.getInt(0) shouldBe 1
+    Seq(
+      (col("v"), col("vv"), cents(lit("1"), array(lit(1.0), lit(0.0)), lit(1.0))),
+      (col("v"), col("vv"), cents(lit(1), array(lit(1), lit(0)), lit(1.0))),
+      (col("v"), col("vv"), cents(lit(1), array(lit(1.0), lit(0.0)), lit(1))),
+      (col("v"), col("vv"), cents(lit(1), array(lit(1.0), lit(0.0)), lit(1.0f))),
+      (array(lit(1), lit(0)), col("vv"), good),
+      (col("v"), lit(1), good),
+      (col("v"), col("vv"), lit(1.0))
+    ).foreach { case (v, vv, cs) =>
+      intercept[org.apache.spark.sql.AnalysisException] {
+        row.select(graft.functions.VectorExpressions.cellArgmin(v, vv, cs)).collect()
+      }.getMessage should include("cell_argmin expects")
+    }
+  }
+
   test("ivf rebalance: partitions the corpus, rewrites only oversized cells, keeps probe contracts") {
     implicit val s = spark
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
@@ -972,6 +997,78 @@ class MlSpec extends SparkSpec {
     capped shouldBe drained(0)
     Seq(1L, 100L, 101L, 102L).foreach { id => capped(id)._2 shouldBe 4L }
     capped(999L) shouldBe ((999L, 1L, 1000000L))
+  }
+
+  test("SoftDedupGate: the index side is cut once per gate — later batches never scan the index source") {
+    implicit val s = spark
+    import s.implicits._
+    val rnd = new scala.util.Random(23)
+    val words = Vector("alpha", "bravo", "carol", "delta", "echo",
+      "fox", "golf", "hotel", "india", "jazz")
+    def txt(n: Int) = Seq.fill(n)(words(rnd.nextInt(words.size))).mkString(" ")
+    val base = txt(60)
+    val dir = tmpDir("gate-index") + "/index.parquet"
+    Seq((1L, base + " index copy"), (2L, txt(50)), (3L, txt(50)))
+      .toDF("doc_id", "text").write.parquet(dir)
+    // a TEXT index, as the stream-gate actor builds it: signatures are a
+    // lazy plan over the parquet scan until the gate cuts them
+    val idxSigs = Dedup.minHashSignatures(spark.read.parquet(dir), "text", "doc_id")
+    val labels = Seq.empty[(Long, Long)].toDF("id", "keep_id")
+    // per phase: (jobs, SQL executions, executions whose plan scans `dir`),
+    // counted only for this test's tagged work
+    val tag = "soft-dedup-gate-pin"
+    val counts = new java.util.concurrent.ConcurrentHashMap[String, Int]()
+    def bump(k: String) = counts.merge(k, 1, Integer.sum)
+    def scans(p: org.apache.spark.sql.execution.SparkPlanInfo): Int =
+      (if (p.nodeName.startsWith("Scan parquet") &&
+           p.metadata.get("Location").exists(_.contains("gate-index"))) 1 else 0) +
+        p.children.map(scans).sum
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.job.tags", "")
+            .split(",").contains(tag))) bump("jobs")
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
+        case x: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+            if x.jobTags.contains(tag) =>
+          bump("sql"); counts.merge("scans", scans(x.sparkPlanInfo), Integer.sum)
+        case _ =>
+      }
+    }
+    def phase[A](f: => A): (A, (Int, Int, Int)) = {
+      counts.clear()
+      val a = f
+      org.apache.spark.ListenerDrain(spark.sparkContext)
+      def c(k: String): Int = counts.getOrDefault(k, 0)
+      (a, (c("jobs"), c("sql"), c("scans")))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    spark.sparkContext.addJobTag(tag)
+    try {
+      val (gate, (_, buildSql, buildScans)) =
+        phase(new graft.ml.SoftDedupGate(labels, idxSigs))
+      // the constructor's eager cut is the one read of the index source
+      buildSql shouldBe 1
+      buildScans shouldBe 1
+      val batches = Seq(
+        Seq((100L, base), (101L, base + " dup dup")),
+        Seq((102L, base + " zz yy")),
+        Seq((103L, txt(40)), (104L, base + " qq")))
+      val per = batches.map { b =>
+        phase(gate.ingest(b.toDF("doc_id", "text"), "text", "doc_id"))._2
+      }
+      // no batch scans the index; per ingest: batch-signature cut, ONE
+      // broadcast-size probe shared by the index and retained legs, edge
+      // cut (batch 1 has no retained leg yet, hence fewer jobs)
+      per.foreach { case (_, sql, sc) => sc shouldBe 0; sql shouldBe 3 }
+      per.map(_._1) shouldBe Seq(11, 14, 14)
+      // and the result is the linked cluster (index doc 1 + 100..102, 104)
+      val w = gate.weights(Seq(1L, 100L, 102L, 103L, 104L).toDF("doc_id"), "doc_id")
+        .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
+      Seq(1L, 100L, 102L, 104L).foreach(id => w(id) should be > 1L)
+    } finally {
+      spark.sparkContext.removeJobTag(tag)
+      spark.sparkContext.removeSparkListener(listener)
+    }
   }
 
   test("capCandidatesSym: true per-doc budget — chance edges in nobody's top-cap drop, planted edges survive") {
