@@ -85,20 +85,22 @@ object Queries {
   /** Drain a streaming frame through a memory sink (AvailableNow) and
    *  return the result. Shared epilogue for every streaming gate query:
    *  shuffle partitions drop for the run (state-store count equals
-   *  shuffle partitions; the default 8 covers these key cardinalities at
-   *  4× less per-partition store setup than the session's 32, and the
-   *  stateful stream-stream joins pass 4 — they carry 4 stores per
-   *  partition) and the sink's temp view is dropped once
-   *  the result Dataset is resolved — otherwise each invocation pins a
-   *  full result table in driver memory for the session's lifetime. */
+   *  shuffle partitions; the default [[Dedup.SmallLoopShuffle]] (8)
+   *  covers these key cardinalities at 4× less per-partition store
+   *  setup than the session's 32, and the stateful stream-stream joins
+   *  pass 4 — they carry 4 stores per partition) and the sink's temp
+   *  view is dropped once the result Dataset is resolved — otherwise
+   *  each invocation pins a full result table in driver memory for the
+   *  session's lifetime. */
   private def drainToMemory(spark: SparkSession, df: DataFrame, prefix: String,
-                            mode: String, shuffle: String = "8"): DataFrame = {
+                            mode: String,
+                            shuffle: String = Dedup.SmallLoopShuffle): DataFrame = {
     // The low shuffle-partition override lives on a CLONED session
     // (isolated SQLConf, shared SparkContext/cache) so a concurrent query
     // planning against the shared session never observes it — mutate-and-
     // restore on the shared conf raced.
     val scoped = org.apache.spark.sql.GraftSqlBridge.clonedSession(spark,
-      "spark.sql.shuffle.partitions" -> sys.props.getOrElse("graft.drain.shuffle", shuffle))
+      "spark.sql.shuffle.partitions" -> shuffle)
     val qname = s"${prefix}_${System.nanoTime}"
     val sq = org.apache.spark.sql.GraftSqlBridge.onSession(scoped, df)
       .writeStream.format("memory").queryName(qname)
@@ -7133,7 +7135,7 @@ object Queries {
       // MemRowStore is JVM-global, so the MERGEs land in the same store
       // the final read (on the caller's session) sees.
       val scoped = org.apache.spark.sql.GraftSqlBridge.clonedSession(spark,
-        "spark.sql.shuffle.partitions" -> sys.props.getOrElse("graft.drain.shuffle", "8"),
+        "spark.sql.shuffle.partitions" -> Dedup.SmallLoopShuffle,
         "spark.sql.catalog.graft_mem" -> classOf[graft.source.MemRowCatalog].getName)
       locally {
         val q = org.apache.spark.sql.GraftSqlBridge.onSession(scoped, stream).writeStream
@@ -7722,7 +7724,7 @@ object Queries {
       // low drain shuffle on a CLONED session (q70's foreachBatch
       // discipline); the gate accumulates edges per micro-batch
       val scoped = org.apache.spark.sql.GraftSqlBridge.clonedSession(spark,
-        "spark.sql.shuffle.partitions" -> sys.props.getOrElse("graft.drain.shuffle", "8"))
+        "spark.sql.shuffle.partitions" -> Dedup.SmallLoopShuffle)
       locally {
         val q = org.apache.spark.sql.GraftSqlBridge.onSession(scoped, batch).writeStream
           .foreachBatch { (b: DataFrame, _: Long) => gate.ingest(b, "text", "doc_id") }
@@ -7767,7 +7769,7 @@ object Queries {
       val gate = new graft.ml.SoftDedupGate(labels, idxSigs,
         maxCandidatesPerDoc = 4)
       val scoped = org.apache.spark.sql.GraftSqlBridge.clonedSession(spark,
-        "spark.sql.shuffle.partitions" -> sys.props.getOrElse("graft.drain.shuffle", "8"))
+        "spark.sql.shuffle.partitions" -> Dedup.SmallLoopShuffle)
       locally {
         val q = org.apache.spark.sql.GraftSqlBridge.onSession(scoped, batch).writeStream
           .foreachBatch { (b: DataFrame, _: Long) => gate.ingest(b, "text", "doc_id") }

@@ -16,6 +16,16 @@ import org.apache.spark.sql.functions._
  */
 object Dedup {
 
+  /** Shuffle partitions for a BATCH-SIZED loop run on a cloned session:
+   *  the star-contraction CC rounds, the incremental-update CC loop and
+   *  the streaming-gate drains. Their frames are pair-list- or
+   *  batch-sized, far below the session's fact-table-sized setting, so
+   *  fewer reduce partitions cut AQE planning and task-launch latency
+   *  per shuffle (update loop, 32 cores, medians: 32 partitions 2.67 s,
+   *  8 partitions 2.28 s). The clone isolates the setting from the
+   *  caller's session. */
+  private[graft] val SmallLoopShuffle = "8"
+
   /** Lowercase + collapse whitespace — the canonical text normalization
    *  applied before any hashing. */
   def normText(c: Column): Column = lower(regexp_replace(c, "\\s+", " "))
@@ -690,7 +700,8 @@ object Dedup {
    * for high-diameter graphs; near-dup clusters are shallow in practice.
    */
   def clusterLabels(pairs: DataFrame, iterations: Int = 4,
-                    ckptEvery: Int = 0): DataFrame = {
+                    ckptEvery: Int = 4): DataFrame = {
+    require(ckptEvery >= 1, s"ckptEvery must be >= 1, got $ckptEvery")
     // Iterative algorithms MUST truncate lineage each round: the next
     // round's plan references the previous labels twice, so both the
     // recompute AND the logical-plan tree double per iteration without a
@@ -736,11 +747,11 @@ object Dedup {
     // localCheckpoint costs a full driver-side plan compile
     // (analysis -> AQE -> codegen, ~0.15-0.25 s at any scale), so cutting
     // every 4th round quarters the fixed driver cost of the loop while
-    // the lineage stays bounded at 4 joins deep. Same dataflow, same
-    // arithmetic, bit-identical labels for every input — the knob
-    // (-Dgraft.labels.ckptEvery, default 4) is the A/B device.
+    // the lineage stays bounded at 4 joins deep — hence the default
+    // cadence of 4. Same dataflow, same arithmetic, bit-identical labels
+    // for every cadence.
     //
-    // PER-CALL-SITE override (r17): a cut cadence > 1 leaves the edges
+    // PER-CALL-SITE cadence (r17): a cut cadence > 1 leaves the edges
     // Union referenced MULTIPLE times inside one un-cut plan segment, and
     // on some input lineages (in-session frames with richer constraint
     // sets than a parquet read) Spark 4.1's constraint rewrite trips over
@@ -749,22 +760,17 @@ object Dedup {
     // deterministically by MlSpec's resolveUpdate/rebase pins at
     // ckptEvery >= 2; green at 1). The lazily cut `edges` above removed
     // that trigger, so the incremental-update path (resolveUpdateFromEdges)
-    // now passes a cadence of `iterations` (one cut for its whole loop;
-    // -Dgraft.labels.updateCkptEvery overrides);
-    // the batch 4-round sites keep the knob default (every plan the
-    // catalog compiles there is oracle-verified green, and r16 measured
-    // the single-cut loop faster: m6 2.12 -> 1.52, q114 2.37 -> 1.76).
-    val ckEff =
-      if (ckptEvery > 0) ckptEvery
-      else math.max(1, scala.util.Try(
-        sys.props.getOrElse("graft.labels.ckptEvery", "4").toInt).getOrElse(4))
+    // now passes a cadence of `iterations` (one cut for its whole loop);
+    // the batch 4-round sites keep the default (every plan the catalog
+    // compiles there is oracle-verified green, and r16 measured the
+    // single-cut loop faster: m6 2.12 -> 1.52, q114 2.37 -> 1.76).
     var labels = ids.select(col("id"), col("id").as("label"))
     (1 to iterations).foreach { i =>
       labels = edges.join(labels.withColumnRenamed("id", "dst2"),
           col("dst") === col("dst2"))
         .groupBy(col("src")).agg(min(col("label")).as("label"))
         .withColumnRenamed("src", "id")
-      if (i % ckEff == 0 || i == iterations)
+      if (i % ckptEvery == 0 || i == iterations)
         labels = labels.localCheckpoint(false)
     }
     labels.select(col("id"), col("label").as("cluster_id"))
@@ -801,10 +807,10 @@ object Dedup {
 
   /** Keep-list from candidate pairs: every id in a duplicate cluster mapped
    *  to the cluster's min id (`keep_id`); `is_duplicate` marks losers.
-   *  `ckptEvery` passes through to [[clusterLabels]]' lineage-cut cadence
-   *  (0 = the knob default). */
+   *  `ckptEvery` passes through to [[clusterLabels]]' lineage-cut
+   *  cadence. */
   def resolveDuplicates(pairs: DataFrame, iterations: Int = 4,
-                        ckptEvery: Int = 0): DataFrame =
+                        ckptEvery: Int = 4): DataFrame =
     clusterLabels(pairs, iterations, ckptEvery)
       .select(col("id"), col("cluster_id").as("keep_id"),
         (col("id") =!= col("cluster_id")).as("is_duplicate"))
@@ -966,8 +972,8 @@ object Dedup {
     // The subgraph CC loop is tuned for its one invariant the batch path
     // lacks: its frames are BATCH-NEIGHBORHOOD-sized (star edges of the
     // touched clusters + the new edges), never corpus-sized. Two moves,
-    // both measured on the paired in-JVM stage-D A/B (ProfileD26D, 32
-    // cores, interleaved samples, medians):
+    // both measured on a paired in-JVM stage-D A/B (32 cores,
+    // interleaved samples, medians):
     //
     //  1. Cut cadence = `iterations` (one fused plan compile for the
     //     whole loop; the lazy end-cut only re-roots the result).
@@ -976,13 +982,9 @@ object Dedup {
     //     a driver-synchronized materialization wave, and the
     //     re-rooted edges LogicalRDD (see clusterLabels) keeps the
     //     8-join-deep plan constraint-safe (the r16 cadence>=2 crash).
-    //     -Dgraft.labels.updateCkptEvery still overrides for A/B.
-    //  2. The loop runs on a CLONED session at a small shuffle-partition
-    //     count (-Dgraft.labels.updateShuffle, default 8 — the same
-    //     batch-sized-loop discipline as clusterLabelsStars'
-    //     graft.stars.shuffle): cadence-8 medians 32-part 2.67 s vs
-    //     8-part 2.28 s. Production corpora with large ingest batches
-    //     raise the knob; the surrounding artifact-scale joins
+    //  2. The loop runs on a CLONED session at [[SmallLoopShuffle]]
+    //     partitions (cadence-8 medians: 32 partitions 2.67 s,
+    //     8 partitions 2.28 s). The surrounding artifact-scale joins
     //     (starEdges build, untouched anti-join) stay on the CALLER's
     //     session and its full-scale shuffle settings.
     //
@@ -990,17 +992,13 @@ object Dedup {
     // intermediates — min-label propagation is deterministic per round
     // (MlSpec pins the incremental==full equivalence; the d26/q115/q116
     // oracles re-resolve the full union corpus and hash-match).
-    val updateCk = math.max(0, scala.util.Try(
-      sys.props.getOrElse("graft.labels.updateCkptEvery",
-        iterations.toString).toInt).getOrElse(iterations))
     val spark0 = labels.sparkSession
     val scoped = org.apache.spark.sql.GraftSqlBridge.clonedSession(spark0,
-      "spark.sql.shuffle.partitions" ->
-        sys.props.getOrElse("graft.labels.updateShuffle", "8"))
+      "spark.sql.shuffle.partitions" -> SmallLoopShuffle)
     val subEdges = org.apache.spark.sql.GraftSqlBridge.onSession(scoped,
       starEdges.unionAll(newEdges.select(col("id_a"), col("id_b"))))
     val sub = org.apache.spark.sql.GraftSqlBridge.onSession(spark0,
-      resolveDuplicates(subEdges, iterations, updateCk))
+      resolveDuplicates(subEdges, iterations, math.max(1, iterations)))
     val untouched = lab.join(touched, Seq("keep_id"), "left_anti")
       .select(col("id"), col("keep_id"),
         (col("id") =!= col("keep_id")).as("is_duplicate"))
@@ -1216,12 +1214,12 @@ object Dedup {
     // the per-round frames are pair-list-sized, far below the session's
     // fact-table-sized shuffle settings: fewer reduce partitions per round
     // cut AQE planning + task-launch latency across the ~5 shuffles/round
-    // (override for real-cluster corpora via graft.stars.shuffle).
-    // The override lives on a CLONED session (isolated SQLConf, shared
-    // SparkContext + cache), never on the caller's — a concurrent query
-    // planning against the shared session must not observe it.
+    // ([[SmallLoopShuffle]]). The setting lives on a CLONED session
+    // (isolated SQLConf, shared SparkContext + cache), never on the
+    // caller's — a concurrent query planning against the shared session
+    // must not observe it.
     val scoped = org.apache.spark.sql.GraftSqlBridge.clonedSession(spark0,
-      "spark.sql.shuffle.partitions" -> sys.props.getOrElse("graft.stars.shuffle", "8"))
+      "spark.sql.shuffle.partitions" -> SmallLoopShuffle)
     val result = clusterLabelsStarsImpl(
       org.apache.spark.sql.GraftSqlBridge.onSession(scoped, pairs), maxIterations)
     // hand the result back on the caller's session so downstream composition
@@ -1244,14 +1242,15 @@ object Dedup {
    *  partition union as the input (union-find is a spanning-forest
    *  reduction), and [[clusterLabelsStars]]' output is the unique
    *  fixpoint of the input's components — partitioning moves only the
-   *  intermediate, never the result (MlSpec pins contract-on == off).
+   *  intermediate, never the result (MlSpec pins the labels against an
+   *  exact union-find reference).
    *
-   *  Memory: one LongMap entry per distinct node in the partition —
-   *  size shuffle partitions (graft.stars.shuffle) so a partition's
-   *  node count fits the executor, same discipline as any hash
-   *  aggregation. Union-by-min + path compression keeps each set's
-   *  root at its min id, so the emitted stars are already the local
-   *  fixpoint shape. */
+   *  Memory: one LongMap entry per distinct node in the partition. The
+   *  range repartition spreads the pair list over [[SmallLoopShuffle]]
+   *  partitions, so a partition's node count must fit the executor —
+   *  same discipline as any hash aggregation. Union-by-min + path
+   *  compression keeps each set's root at its min id, so the emitted
+   *  stars are already the local fixpoint shape. */
   private[graft] def localContract(e: DataFrame): DataFrame = {
     val spark = e.sparkSession
     import spark.implicits._
@@ -1275,37 +1274,21 @@ object Dedup {
   }
 
   private def clusterLabelsStarsImpl(pairs: DataFrame, maxIterations: Int): DataFrame = {
-    val dbg = sys.props.get("graft.stars.debug").contains("1")
-    def dbgT[A](name: String)(f: => A): A =
-      if (!dbg) f else {
-        val t0 = System.nanoTime()
-        val r = f
-        System.err.println(f"[stars] $name ${(System.nanoTime() - t0) / 1e9}%.2f s")
-        r
-      }
-    val (edges0raw, edges0rawIds) = dbgT("init_checkpoint")(trackedCheckpoint(
+    val (edges0raw, edges0rawIds) = trackedCheckpoint(
       pairs
         .select(col("id_a").cast("long").as("u"), col("id_b").cast("long").as("v"))
         .filter(col("u") =!= col("v"))
         .distinct(),
-      eager = true))
-    // Local-contraction preamble (default on; -Dgraft.stars.localContract=0
-    // is the A/B device / escape hatch): one range shuffle + one linear
+      eager = true)
+    // Local-contraction preamble: one range shuffle + one linear
     // union-find pass, run on the ALREADY-CHECKPOINTED edge list so the
     // upstream pair pipeline is never executed twice (the range
     // partitioner's sampling job reads the checkpoint, not the pipeline).
     // Measured r16 at sf0.1 (d9): rounds-to-fixpoint 16 -> 4, and each
     // avoided round is a driver-side plan compile + ~5 tiny stages.
-    val contractOn =
-      !sys.props.getOrElse("graft.stars.localContract", "1").trim.equals("0")
-    val (edges0, edges0Ids) =
-      if (!contractOn) (edges0raw, edges0rawIds)
-      else {
-        val (c, cIds) = dbgT("contract_checkpoint")(trackedCheckpoint(
-          localContract(edges0raw.repartitionByRange(col("u"))), eager = true))
-        unpersistIds(c.sparkSession, edges0rawIds)
-        (c, cIds)
-      }
+    val (edges0, edges0Ids) = trackedCheckpoint(
+      localContract(edges0raw.repartitionByRange(col("u"))), eager = true)
+    unpersistIds(edges0.sparkSession, edges0rawIds)
     var edges = edges0
     // Convergence = edge set unchanged over a full round, detected by
     // (count, order-independent hash-sum) — two scalars per round.
@@ -1313,15 +1296,14 @@ object Dedup {
       val r = e.agg(count(lit(1)), sum(hash(col("u"), col("v")).cast("long"))).head()
       (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
     }
-    var fp = dbgT("init_fingerprint")(fingerprint(edges))
+    var fp = fingerprint(edges)
     var prevIds = edges0Ids
     var converged = false
     var i = 0
     while (!converged && i < maxIterations) {
-      // TWO large+small rounds per convergence probe (overridable via
-      // graft.stars.probeRounds, A/B device): the probe is a driver-
-      // synchronizing action, and edge counts shrink geometrically, so
-      // batching rounds per probe trades wasted post-fixpoint rounds
+      // TWO large+small rounds per convergence probe: the probe is a
+      // driver-synchronizing action, and edge counts shrink
+      // geometrically, so batching rounds per probe trades wasted post-fixpoint rounds
       // against saved syncs. The r15 A/B (CC-warmed subset, paired runs)
       // measured 3 rounds/probe at PARITY-to-slightly-worse than 2 at
       // bench scale: typical duplicate graphs here converge in ~4-6
@@ -1334,8 +1316,7 @@ object Dedup {
       // action below materializes the whole probe's DAG as one job — an
       // eager checkpoint would run each round as a separate driver-
       // synchronized job first (measured ~100ms extra per probe).
-      val roundsPerProbe = math.max(1, scala.util.Try(
-        sys.props.getOrElse("graft.stars.probeRounds", "2").toInt).getOrElse(2))
+      val roundsPerProbe = 2
       var cur = edges
       var curIds = Set.empty[Int]
       var deadIds = prevIds
@@ -1346,14 +1327,7 @@ object Dedup {
         deadIds ++= curIds // superseded intermediate round
         cur = nxt; curIds = ids; j += 1
       }
-      val t0 = System.nanoTime()
       val nfp = fingerprint(cur)
-      // measurement knob (-Dgraft.stars.debug=1): per-probe round count,
-      // edge count, and probe-job wall time on stderr — the r16 profiling
-      // lever for the scheduling-bound CC class (d9/d18/d26/g4).
-      if (sys.props.get("graft.stars.debug").contains("1"))
-        System.err.println(f"[stars] probe after round ${i + roundsPerProbe}: " +
-          f"edges=${nfp._1} probe_s=${(System.nanoTime() - t0) / 1e9}%.2f")
       // everything before `cur` is now dead weight — free the superseded
       // rounds' blocks instead of pinning one edge-list copy per round
       unpersistIds(cur.sparkSession, deadIds)

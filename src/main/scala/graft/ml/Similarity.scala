@@ -731,11 +731,9 @@ object Similarity {
    *  DEGENERATE index (K ~ 1e5 cells after runaway splits) — and it
    *  would be rebuilt per consumer. Above the ceiling [[filterCranks]]
    *  falls back to a broadcast semi/anti join against the id list (the
-   *  pre-census shape, results identical). MlSpec exercises the
-   *  fallback at K > the ceiling against the literal path's output
-   *  (via the sys-prop override — test device only). */
-  private[ml] def maxInCrankLiterals: Int =
-    sys.props.get("graft.census.inMax").map(_.toInt).getOrElse(1000)
+   *  pre-census shape, results identical). The choice keys on the id
+   *  list's size; MlSpec reaches both sides of it by input size. */
+  private val maxInCrankLiterals = 1000
 
   /** `crank ∈ ids` over `df` as a broadcast-free codegen'd predicate
    *  (false for the empty set). Literal values are narrowed to the
@@ -754,7 +752,7 @@ object Similarity {
 
   /** KEEP (semi) or DROP (anti) the rows whose `name` column falls in
    *  `ids`: the codegen'd `isin` literal predicate up to
-   *  [[MaxInCrankLiterals]] ids, a broadcast semi/anti join over the id
+   *  [[maxInCrankLiterals]] ids, a broadcast semi/anti join over the id
    *  list beyond it. The ids came off the driver-collected census, so
    *  the local-relation build is census-sized either way; values are
    *  cast to the column's own type so the join stays cast-free.

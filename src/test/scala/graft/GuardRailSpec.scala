@@ -174,43 +174,62 @@ class GuardRailSpec extends SparkSpec {
     }
   }
 
+  /** `file:line: text` for every non-comment line of a `.scala` file
+   *  under `src/main/scala/<dir>` (recursively) that `offends`.
+   *  Anchored on the sbt build root, walking up from the CWD, so a
+   *  non-root working directory FAILS LOUDLY via the require below
+   *  instead of silently scanning nothing. */
+  private def mainSourceOffenders(dir: String)(
+      offends: (String, String) => Boolean): Seq[String] = {
+    val root = Iterator.iterate(
+        java.nio.file.Paths.get("").toAbsolutePath)(_.getParent)
+      .takeWhile(_ != null).take(6)
+      .find(p => java.nio.file.Files.exists(p.resolve("build.sbt")))
+      .getOrElse(java.nio.file.Paths.get(""))
+    val base = root.resolve("src/main/scala").resolve(dir)
+    require(java.nio.file.Files.isDirectory(base),
+      s"source scan found no dir at $base — run tests from the repo " +
+        "(or fix the anchor), don't let the guard scan nothing")
+    val walk = java.nio.file.Files.walk(base)
+    val files =
+      try walk.toArray.toSeq.map(_.asInstanceOf[java.nio.file.Path])
+      finally walk.close()
+    files.filter(_.toString.endsWith(".scala")).sortBy(_.toString).flatMap { p =>
+      val name = base.relativize(p).toString
+      new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
+        .linesIterator.zipWithIndex.collect {
+          case (l, i) if !l.trim.startsWith("//") && !l.trim.startsWith("*") &&
+            offends(name, l) => s"$name:${i + 1}: ${l.trim}"
+        }.toSeq
+    }
+  }
+
   test("every ml-layer persist rides the CacheLease ownership contract") {
     // The r13 bench stalls traced to corpus-scale caches no caller could
     // free (the pass returns frames that DEPEND on them). CacheLease is
     // the fix — but only if every ml persist goes through it: a raw
     // .persist() added later silently re-opens the leak for the actor
     // surface and any leased library caller. Fail at add time instead.
-    // anchor on the sbt build root (tests normally run from it), walking
-    // up from the CWD so a non-root working directory FAILS LOUDLY via
-    // the require below instead of silently scanning nothing
-    val root = Iterator.iterate(
-        java.nio.file.Paths.get("").toAbsolutePath)(_.getParent)
-      .takeWhile(_ != null).take(6)
-      .find(p => java.nio.file.Files.exists(p.resolve("build.sbt")))
-      .getOrElse(java.nio.file.Paths.get(""))
-    val mlDir = root.resolve("src/main/scala/graft/ml")
-    require(java.nio.file.Files.isDirectory(mlDir),
-      s"lease-contract scan found no ml source dir at $mlDir — run tests " +
-        "from the repo (or fix the anchor), don't let the guard scan nothing")
-    val listing = java.nio.file.Files.list(mlDir)
-    val mlFiles =
-      try listing.toArray.toSeq.map(_.asInstanceOf[java.nio.file.Path])
-      finally listing.close()
-    val offenders = mlFiles
-      .filter(_.toString.endsWith(".scala"))
-      .filterNot(_.getFileName.toString == "CacheLease.scala")
-      .flatMap { p =>
-        val lines = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
-          .linesIterator.zipWithIndex.toSeq
-        lines.collect {
-          case (l, i) if l.contains(".persist(") &&
-            !l.contains("CacheLease.persist") &&
-            !l.trim.startsWith("//") && !l.trim.startsWith("*") =>
-            s"${p.getFileName}:${i + 1}: ${l.trim}"
-        }
-      }
+    val offenders = mainSourceOffenders("graft/ml") { (file, l) =>
+      file != "CacheLease.scala" &&
+        l.contains(".persist(") && !l.contains("CacheLease.persist")
+    }
     withClue("raw .persist() in graft.ml (route through CacheLease.persist " +
       "so the actor surface can free it at job teardown): ") {
+      offenders shouldBe empty
+    }
+  }
+
+  test("no JVM-global system-property read in the program sources") {
+    // A -D property read deep in library code cannot be set per
+    // pipeline, cannot differ between two sessions in one JVM and never
+    // shows in the metrics record. Tuning decisions are constants or
+    // per-session confs; deployment settings (paths, CPU count, keys)
+    // come from sys.env, which stays allowed.
+    val offenders = mainSourceOffenders("graft") { (_, l) =>
+      l.contains("sys.props") || l.contains("System.getProperty")
+    }
+    withClue("JVM-global property reads under src/main/scala/graft: ") {
       offenders shouldBe empty
     }
   }

@@ -93,6 +93,22 @@ class MlSpec extends SparkSpec {
     out(11L) shouldBe ((10L, true))
   }
 
+  test("clusterLabels rejects a non-positive ckptEvery before planning") {
+    implicit val s = spark
+    import spark.implicits._
+    // a cadence below 1 would reach `i % ckptEvery` and throw an
+    // ArithmeticException mid-plan; it must fail up front, by name
+    val pairs = Seq((1L, 2L)).toDF("id_a", "id_b")
+    for (bad <- Seq(0, -3)) {
+      intercept[IllegalArgumentException] {
+        Dedup.clusterLabels(pairs, 4, bad)
+      }.getMessage should include("ckptEvery")
+      intercept[IllegalArgumentException] {
+        Dedup.resolveDuplicates(pairs, 4, bad)
+      }.getMessage should include("ckptEvery")
+    }
+  }
+
   test("boilerplate strip removes shared template spans, keeps unique text") {
     implicit val s = spark
     import spark.implicits._
@@ -188,7 +204,7 @@ class MlSpec extends SparkSpec {
     viaStars shouldBe fixed
   }
 
-  test("stars local-contraction preamble: on/off result identity, spanning-forest property") {
+  test("stars local-contraction preamble: labels equal an exact union-find reference") {
     implicit val s = spark
     import spark.implicits._
     // mixed-shape graph: a deep chain, a clique, a star, singleton pairs,
@@ -199,21 +215,23 @@ class MlSpec extends SparkSpec {
     val clique = for (a <- 0 until 12; b <- (a + 1) until 12)
       yield (5000L + a * 13L, 5000L + b * 13L)
     val star = (1 until 30).map(i => (9000L, 9000L + rnd.nextInt(500) + 1L))
-    val pairs0 = rnd.shuffle(chain ++ clique ++ star ++
-      Seq((77L, 78L), (42L, 41L))).toDF("id_a", "id_b")
-    def labels(): Set[(Long, Long)] =
-      Dedup.clusterLabelsStars(pairs0).collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toSet
-    val withContract = labels()
-    val old = sys.props.put("graft.stars.localContract", "0")
-    val withoutContract = try labels()
-    finally old match {
-      case Some(v) => sys.props.put("graft.stars.localContract", v)
-      case None => sys.props.remove("graft.stars.localContract")
+    val edges = rnd.shuffle(chain ++ clique ++ star ++ Seq((77L, 78L), (42L, 41L)))
+    val pairs0 = edges.toDF("id_a", "id_b")
+    val labels = Dedup.clusterLabelsStars(pairs0).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toSet
+    // exact connected components: driver-side union-find, root = set min
+    val parent = scala.collection.mutable.Map.empty[Long, Long]
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
     }
-    withContract shouldBe withoutContract
-    // chain fully merged to its min whichever path ran
-    withContract.filter(_._1 >= 1000L).filter(_._1 <= 1000L + 150 * 7L)
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    labels shouldBe parent.keys.map(k => k -> find(k)).toSet
+    // chain fully merged to its min
+    labels.filter(_._1 >= 1000L).filter(_._1 <= 1000L + 150 * 7L)
       .map(_._2) shouldBe Set(1000L)
   }
 
@@ -679,9 +697,8 @@ class MlSpec extends SparkSpec {
     // DEGENERATE index: 1200 cells, 1100 of them starved singletons. The
     // starved-id selection would build an 1100-literal In expression per
     // consumer (codegen-blowup territory at runaway-split K), so above
-    // maxInCrankLiterals it must ride the broadcast semi/anti-join
-    // fallback — with results identical to the literal path (exercised
-    // here via the test-only sys-prop override of the ceiling).
+    // the 1000-literal ceiling it must ride the broadcast semi/anti-join
+    // fallback — with exactly the merge the isin semantics define.
     def vec(x: Double) = Seq(x, 1.0)
     val bigCents = (0 until 100).map(c => (c.toLong, vec(c * 1000.0)))
     val smallCents = (100 until 1200).map(c => (c.toLong, vec(c * 1000.0)))
@@ -699,11 +716,16 @@ class MlSpec extends SparkSpec {
       r._2.select("crank", "parent_crank", "id").collect()
         .map(x => (x.getLong(0), x.getLong(1), x.getLong(2))).toSet)
     val viaFallback = key(Similarity.ivfMerge(cents, asg, 4))
-    System.setProperty("graft.census.inMax", "100000")
-    val viaLiterals =
-      try key(Similarity.ivfMerge(cents, asg, 4))
-      finally sys.props.remove("graft.census.inMax")
-    viaFallback shouldBe viaLiterals
+    // expected merge, from the fixture: big cells keep their rows, each
+    // starved row moves to the nearest big centroid (squared L2, ties to
+    // the smaller crank) with its old cell as parent_crank
+    def dist2(a: Seq[Double], b: Seq[Double]) =
+      a.zip(b).map { case (x, y) => (x - y) * (x - y) }.sum
+    def nearestBig(v: Seq[Double]) =
+      bigCents.minBy { case (c, cv) => (dist2(v, cv), c) }._1
+    val expectedRows = asgRows.map { case (c, id, v) =>
+      if (c < 100L) (c, c, id) else (nearestBig(v), c, id) }.toSet
+    viaFallback shouldBe (((0L until 100L).toSet, expectedRows))
     // and the dissolution actually ran: only the 100 big cells survive,
     // every singleton row was absorbed with its lineage marked
     viaFallback._1 shouldBe (0L until 100L).toSet
@@ -719,28 +741,29 @@ class MlSpec extends SparkSpec {
     // (the predicate evaluates to NULL) while a bare left_anti keeps
     // it (NULL never matches the equi-join) — the anti branch carries
     // an explicit isNotNull conjunct so the two paths stay
-    // result-identical. Paths forced via the test-only ceiling
-    // override; ids [0,600) with rows 0..999 + two NULL-key rows.
+    // result-identical. The path is picked by id-list size around the
+    // 1000-literal ceiling: rows 0..999 + two NULL-key rows, and two id
+    // lists that both select cranks [0,600) — 1000 ids (literal path)
+    // and 1001 ids (join path), the extras matching no row.
     val df = ((0 until 1000).map(i => (Some(i.toLong), i.toLong)) ++
       Seq((None: Option[Long], 5000L), (None: Option[Long], 5001L)))
       .toDF("crank", "id")
-    val ids = (0L until 600L).toSeq
-    def run(keep: Boolean, ceiling: String): Set[Long] = {
-      System.setProperty("graft.census.inMax", ceiling)
-      try Similarity.filterCranks(df, "crank", ids, keep)
-        .select("id").collect().map(_.getLong(0)).toSet
-      finally sys.props.remove("graft.census.inMax")
+    val literalIds = (0L until 600L) ++ (100000L until 100400L)
+    val joinIds = literalIds :+ 200000L
+    def run(keep: Boolean, ids: Seq[Long]): Set[Long] = {
+      val out = Similarity.filterCranks(df, "crank", ids, keep)
+      val joins = out.queryExecution.analyzed.collect {
+        case j: org.apache.spark.sql.catalyst.plans.logical.Join => j }
+      withClue(s"${ids.size} ids, join path:") { joins.nonEmpty shouldBe (ids.size > 1000) }
+      out.select("id").collect().map(_.getLong(0)).toSet
     }
-    for (keep <- Seq(true, false)) {
-      val literal = run(keep, "100000")
-      val joined = run(keep, "1")
-      withClue(s"keep=$keep:") { joined shouldBe literal }
-    }
-    // and the shared semantics are the isin ones: NULL keys match
-    // neither direction — id 5000/5001 appear in NO output
-    run(keep = false, "1") should not contain 5000L
-    run(keep = false, "100000") should not contain 5000L
-    run(keep = true, "1").size + run(keep = false, "1").size shouldBe 1000
+    // the isin semantics: NULL keys match neither direction — ids
+    // 5000/5001 appear in NO output
+    val expected = Map(true -> (0L until 600L).toSet, false -> (600L until 1000L).toSet)
+    for (keep <- Seq(true, false); ids <- Seq(literalIds, joinIds))
+      withClue(s"keep=$keep, ${ids.size} ids:") { run(keep, ids) shouldBe expected(keep) }
+    for (ids <- Seq(literalIds, joinIds))
+      run(keep = false, ids) should contain noneOf (5000L, 5001L)
   }
 
   test("ivf rebalance: a degenerate split never leaves an empty sub-centroid cell") {

@@ -43,7 +43,7 @@ object ProfileGate {
       val gate = new graft.ml.SoftDedupGate(labels, idxSigs,
         maxCandidatesPerDoc = cap)
       val scoped = org.apache.spark.sql.GraftSqlBridge.clonedSession(spark,
-        "spark.sql.shuffle.partitions" -> sys.props.getOrElse("graft.drain.shuffle", "8"))
+        "spark.sql.shuffle.partitions" -> graft.ml.Dedup.SmallLoopShuffle)
       t("S_stream_drain") {
         val q = org.apache.spark.sql.GraftSqlBridge.onSession(scoped, batch).writeStream
           .foreachBatch { (b: DataFrame, _: Long) => gate.ingest(b, "text", "doc_id") }
