@@ -161,6 +161,34 @@ object Bench {
       (true, Map.empty)
     }
 
+  private def writeRecord(path: String, json: String): Boolean =
+    try {
+      java.nio.file.Files.write(java.nio.file.Paths.get(path),
+        json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      true
+    } catch { case e: Throwable =>
+      System.err.println(s"[bench] could not write $path: $e"); false
+    }
+
+  /** Land a full-catalog record as `histFile` — the history this run
+   *  read and gated against ([[readHistory]]), so a run pointed at
+   *  another history (SPARK_GRAFT_BENCH_HISTORY) can never overwrite a
+   *  record it did not read. Lands only when `veto` is empty and the
+   *  history's directory exists (a checkout without docs/bench/ keeps
+   *  no history). Returns whether the record was written. */
+  private[graft] def landHistory(histFile: String, json: String,
+                                 veto: Option[String]): Boolean = {
+    val dir = new java.io.File(histFile).getAbsoluteFile.getParentFile
+    veto match {
+      case _ if dir == null || !dir.isDirectory => false
+      case None => writeRecord(histFile, json)
+      case Some(why) =>
+        System.err.println(s"[bench] not landing $histFile ($why) — " +
+          "history keeps the last healthy record")
+        false
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -569,18 +597,14 @@ object Bench {
     // own epilogue around stdout, so ALSO land the JSON in a file the
     // driver (or any harness) can read without scraping logs.
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "/tmp/bench.json")
-    def land(path: String): Unit =
-      try java.nio.file.Files.write(java.nio.file.Paths.get(path),
-        json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      catch { case e: Throwable => System.err.println(s"[bench] could not write $path: $e") }
-    land(outFile)
+    writeRecord(outFile, json)
     // Durability: the round record's stdout tail truncates at ~2 KB, so
     // only ~50 of 240+ per-query timings survive into BENCH_r{N}.json.
-    // ALSO land the full detail inside the repo (docs/bench/latest.json,
-    // committed at round close as r{N}.json) so cross-round per-query
-    // regression analysis never depends on a /tmp file the next run
-    // overwrites. Full-catalog runs only — a subset A/B probe must not
-    // clobber the round's record.
+    // ALSO land the full detail as the history file this run read
+    // (docs/bench/latest.json by default, committed at round close as
+    // r{N}.json) so cross-round per-query regression analysis never
+    // depends on a /tmp file the next run overwrites. Full-catalog runs
+    // only — a subset A/B probe must not clobber the round's record.
     // a host_degraded OR visibly-drifted OR per-query-drifted run must
     // NOT become the next run's history gate: its adjudicated numbers
     // are the best available but still host-inflated, and a poisoned
@@ -592,7 +616,7 @@ object Bench {
     // while the marker panel read 1.005 quiet). An honest code
     // regression on a quiet host still updates the history normally; a
     // deliberate multi-query re-pin uses SPARK_GRAFT_FORCE_LAND=1.
-    if (only.isEmpty && skip.isEmpty && new java.io.File("docs/bench").isDirectory) {
+    if (only.isEmpty && skip.isEmpty) {
       val adjMap = results.map(r => r.name -> adjudicated(r)).toMap
       val veto: Option[String] =
         if (sys.env.get("SPARK_GRAFT_FORCE_LAND").contains("1")) None
@@ -601,12 +625,7 @@ object Bench {
         else if (hostDegraded) Some("host_degraded")
         else if (markerDrift > 1.15) Some(f"marker_drift $markerDrift%.3f > 1.15")
         else landingVeto(adjMap, history)
-      veto match {
-        case None => land("docs/bench/latest.json")
-        case Some(why) => System.err.println(
-          s"[bench] not landing docs/bench/latest.json ($why) — " +
-          "history keeps the last healthy record")
-      }
+      landHistory(histFile, json, veto)
     }
     println(json)
     // LAST stdout line is a short total-only JSON that fits any log-tail

@@ -568,6 +568,48 @@ object Queries {
        |FROM ab LEFT JOIN l8 ON ab.new_id = l8.id
        |  LEFT JOIN cs ON l8.label = cs.label""".stripMargin
 
+  /** The q115/q116 body: drain the four-leg stream fixture (see q115)
+   *  through a [[graft.ml.SoftDedupGate]] with the per-document candidate
+   *  budget `maxCandidatesPerDoc` (0 = unlimited), then weight post-drain.
+   *  The two queries differ only in that budget and share one oracle. */
+  private def streamGateDrain(spark: SparkSession, dir: String,
+                              maxCandidatesPerDoc: Int): DataFrame = {
+    val labels = resolvedLabels(spark, dir)
+    val idxSigs = corpusSignatures(spark, dir)
+    val b0 = streamTable(spark, dir, "documents.parquet")
+      .select(col("doc_id"), col("text")).filter(col("doc_id") % 10 === 0)
+    val batch = b0.select((col("doc_id") + 600000L).as("doc_id"), col("text"))
+      .unionAll(b0.select((col("doc_id") + 700000L).as("doc_id"),
+        concat(col("text"), lit(" dup dup dup dup")).as("text")))
+      .unionAll(b0.select((col("doc_id") + 800000L).as("doc_id"),
+        reverse(col("text")).as("text")))
+      .unionAll(b0.select((col("doc_id") + 900000L).as("doc_id"),
+        concat(reverse(col("text")), lit(" qq zz qq zz")).as("text")))
+    val gate = new graft.ml.SoftDedupGate(labels, idxSigs,
+      maxCandidatesPerDoc = maxCandidatesPerDoc)
+    // low drain shuffle on a CLONED session (q70's foreachBatch
+    // discipline); the gate accumulates edges per micro-batch
+    val scoped = org.apache.spark.sql.GraftSqlBridge.clonedSession(spark,
+      "spark.sql.shuffle.partitions" -> Dedup.SmallLoopShuffle)
+    locally {
+      val q = org.apache.spark.sql.GraftSqlBridge.onSession(scoped, batch).writeStream
+        .foreachBatch { (b: DataFrame, _: Long) => gate.ingest(b, "text", "doc_id") }
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
+      q.awaitTermination()
+    }
+    val db = spark.read.parquet(s"$dir/documents.parquet")
+      .filter(col("doc_id") % 10 === 0)
+    val allBatch = db.select((col("doc_id") + 600000L).as("doc_id"))
+      .unionAll(db.select((col("doc_id") + 700000L).as("doc_id")))
+      .unionAll(db.select((col("doc_id") + 800000L).as("doc_id")))
+      .unionAll(db.select((col("doc_id") + 900000L).as("doc_id")))
+    gate.weights(allBatch, "doc_id")
+      .select(col("id").as("new_id"),
+        (col("cluster_size") > 1).cast("int").as("matched"),
+        col("cluster_id"), col("cluster_size"), col("weight_u"))
+  }
+
   /** Image-dedup fixture: the corpus as real 16×16 gray PNGs with planted
    *  identical (%5 → +100000) and one-char-perturbed (%7 → +200000)
    *  copies, hashed to 64-bit aHash strings. Shared by m5/m6. */
@@ -7708,41 +7750,8 @@ object Queries {
     // pair. The oracle re-resolves the WHOLE union corpus (documents ∪
     // planted ∪ batch) and weights off that resolution — the green hash
     // IS the incremental==full proof AND the d24-style batch replay.
-    Spec("q115_stream_soft_dedup_linked", (spark, dir) => {
-      val labels = resolvedLabels(spark, dir)
-      val idxSigs = corpusSignatures(spark, dir)
-      val b0 = streamTable(spark, dir, "documents.parquet")
-        .select(col("doc_id"), col("text")).filter(col("doc_id") % 10 === 0)
-      val batch = b0.select((col("doc_id") + 600000L).as("doc_id"), col("text"))
-        .unionAll(b0.select((col("doc_id") + 700000L).as("doc_id"),
-          concat(col("text"), lit(" dup dup dup dup")).as("text")))
-        .unionAll(b0.select((col("doc_id") + 800000L).as("doc_id"),
-          reverse(col("text")).as("text")))
-        .unionAll(b0.select((col("doc_id") + 900000L).as("doc_id"),
-          concat(reverse(col("text")), lit(" qq zz qq zz")).as("text")))
-      val gate = new graft.ml.SoftDedupGate(labels, idxSigs)
-      // low drain shuffle on a CLONED session (q70's foreachBatch
-      // discipline); the gate accumulates edges per micro-batch
-      val scoped = org.apache.spark.sql.GraftSqlBridge.clonedSession(spark,
-        "spark.sql.shuffle.partitions" -> Dedup.SmallLoopShuffle)
-      locally {
-        val q = org.apache.spark.sql.GraftSqlBridge.onSession(scoped, batch).writeStream
-          .foreachBatch { (b: DataFrame, _: Long) => gate.ingest(b, "text", "doc_id") }
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-      val db = spark.read.parquet(s"$dir/documents.parquet")
-        .filter(col("doc_id") % 10 === 0)
-      val allBatch = db.select((col("doc_id") + 600000L).as("doc_id"))
-        .unionAll(db.select((col("doc_id") + 700000L).as("doc_id")))
-        .unionAll(db.select((col("doc_id") + 800000L).as("doc_id")))
-        .unionAll(db.select((col("doc_id") + 900000L).as("doc_id")))
-      gate.weights(allBatch, "doc_id")
-        .select(col("id").as("new_id"),
-          (col("cluster_size") > 1).cast("int").as("matched"),
-          col("cluster_id"), col("cluster_size"), col("weight_u"))
-    }, Some(q115StreamGateOracle)),
+    Spec("q115_stream_soft_dedup_linked", (spark, dir) =>
+      streamGateDrain(spark, dir, maxCandidatesPerDoc = 0), Some(q115StreamGateOracle)),
 
     // q115 under the PER-DOCUMENT CANDIDATE BUDGET (the q115 sf2 watch
     // item's production lever): the same four-leg fixture drained through
@@ -7754,40 +7763,8 @@ object Queries {
     // UNCAPPED union re-resolve — so the green hash IS the proof that
     // the budget dropped only chance collisions, never a planted edge
     // (true near-dups dominate est-jaccard by construction).
-    Spec("q116_stream_gate_capped", (spark, dir) => {
-      val labels = resolvedLabels(spark, dir)
-      val idxSigs = corpusSignatures(spark, dir)
-      val b0 = streamTable(spark, dir, "documents.parquet")
-        .select(col("doc_id"), col("text")).filter(col("doc_id") % 10 === 0)
-      val batch = b0.select((col("doc_id") + 600000L).as("doc_id"), col("text"))
-        .unionAll(b0.select((col("doc_id") + 700000L).as("doc_id"),
-          concat(col("text"), lit(" dup dup dup dup")).as("text")))
-        .unionAll(b0.select((col("doc_id") + 800000L).as("doc_id"),
-          reverse(col("text")).as("text")))
-        .unionAll(b0.select((col("doc_id") + 900000L).as("doc_id"),
-          concat(reverse(col("text")), lit(" qq zz qq zz")).as("text")))
-      val gate = new graft.ml.SoftDedupGate(labels, idxSigs,
-        maxCandidatesPerDoc = 4)
-      val scoped = org.apache.spark.sql.GraftSqlBridge.clonedSession(spark,
-        "spark.sql.shuffle.partitions" -> Dedup.SmallLoopShuffle)
-      locally {
-        val q = org.apache.spark.sql.GraftSqlBridge.onSession(scoped, batch).writeStream
-          .foreachBatch { (b: DataFrame, _: Long) => gate.ingest(b, "text", "doc_id") }
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-      val db = spark.read.parquet(s"$dir/documents.parquet")
-        .filter(col("doc_id") % 10 === 0)
-      val allBatch = db.select((col("doc_id") + 600000L).as("doc_id"))
-        .unionAll(db.select((col("doc_id") + 700000L).as("doc_id")))
-        .unionAll(db.select((col("doc_id") + 800000L).as("doc_id")))
-        .unionAll(db.select((col("doc_id") + 900000L).as("doc_id")))
-      gate.weights(allBatch, "doc_id")
-        .select(col("id").as("new_id"),
-          (col("cluster_size") > 1).cast("int").as("matched"),
-          col("cluster_id"), col("cluster_size"), col("weight_u"))
-    }, Some(q115StreamGateOracle)),
+    Spec("q116_stream_gate_capped", (spark, dir) =>
+      streamGateDrain(spark, dir, maxCandidatesPerDoc = 4), Some(q115StreamGateOracle)),
 
     Spec("q86_stream_cms_heavy_users", (spark, dir) => {
       val states = eventsStream(spark, dir)

@@ -236,8 +236,8 @@ object Dedup {
 
   /** [[lshMatches]] with the batch-size decision already made: `small`
    *  pins every batch-derived frame broadcast-side. For a caller that
-   *  matches ONE batch against several sides (the streaming gate's index
-   *  and retained legs) and so probes the batch once, not once per leg. */
+   *  matches ONE batch against several sides ([[batchEdges]]' index and
+   *  retained legs) and so probes the batch once, not once per leg. */
   private[graft] def lshMatchesSized(newSigs: DataFrame, indexSigs: DataFrame,
       numHashes: Int, bands: Int, minEstJaccard: Double,
       small: Boolean): DataFrame = {
@@ -1006,40 +1006,74 @@ object Dedup {
   }
 
   /**
+   * The per-batch EDGE SET of the incremental resolution lifecycle — the
+   * one builder behind [[resolveUpdate]] (d26) and
+   * [[SoftDedupGate.ingest]] (q115/q116). The batch signatures `sigs`
+   * are matched, in this leg order:
+   *
+   *  1. against `index` — [[lshMatchesSized]]' one-sided join (never
+   *     index×index);
+   *  2. against themselves — [[lshCandidatePairs]], the batch-internal
+   *     leg;
+   *  3. against `retained` when given — the gate's signatures of every
+   *     PREVIOUS micro-batch, one-sided like the index leg.
+   *
+   * One broadcast-size probe of `sigs` ([[fitsBroadcast]] at
+   * `broadcastBatchMaxRows`) decides the pin for both one-sided legs.
+   * `maxCandidatesPerDoc` > 0 keeps each document's top candidates over
+   * the symmetrized union ([[capCandidatesSym]]); 0 keeps every pair.
+   *
+   * The (id_a, id_b) result is cut EAGERLY: [[resolveUpdateFromEdges]]
+   * consumes an edge list twice (the endpoints frame + the CC base
+   * checkpoint), and each consumption would re-run the banded index
+   * join. Batch-neighborhood-sized — the same localCheckpoint discipline
+   * as [[clusterLabels]]. The probe and every leg read `sigs`, so the
+   * caller materializes it first and owns that storage.
+   */
+  private[graft] def batchEdges(sigs: DataFrame, index: DataFrame,
+      retained: Option[DataFrame], numHashes: Int, bands: Int,
+      minEstJaccard: Double, broadcastBatchMaxRows: Long,
+      maxCandidatesPerDoc: Int): DataFrame = {
+    val small = fitsBroadcast(sigs, broadcastBatchMaxRows)
+    def vs(side: DataFrame) =
+      lshMatchesSized(sigs, side, numHashes, bands, minEstJaccard, small)
+        .select(col("new_id").as("id_a"), col("index_id").as("id_b"), col("est_jaccard"))
+    val self = lshCandidatePairs(sigs, numHashes, bands, minEstJaccard)
+      .select(col("id_a"), col("id_b"), col("est_jaccard"))
+    val all = (Seq(vs(index), self) ++ retained.map(vs)).reduce(_ unionAll _)
+    val budgeted =
+      if (maxCandidatesPerDoc > 0) capCandidatesSym(all, maxCandidatesPerDoc)
+      else all
+    budgeted.select(col("id_a"), col("id_b")).localCheckpoint(true)
+  }
+
+  /**
    * Incremental resolution UPDATE, signature layer (d26): the
    * continuous-ingest maintenance pass for the resolution-artifact
-   * lifecycle. New-batch pairs come from the one-sided
-   * [[lshMatches]] (batch vs index — never index×index) plus
-   * [[lshCandidatePairs]] over the batch alone (batch-internal dups);
-   * together with the per-part banding being identical to banding the
-   * union corpus, those are EXACTLY the pairs a full union re-resolve
-   * would add — so [[resolveUpdateFromEdges]]' output is the full
-   * union resolution at batch-sized cost. Write the result back as the
-   * new artifact (re-stamp with [[corpusFingerprint]] of the union).
+   * lifecycle. The new batch's pairs come from [[batchEdges]] — the
+   * edge builder it shares with [[SoftDedupGate]] — here with the index
+   * and batch-internal legs only. Banding each part is identical to
+   * banding the union corpus, so those are EXACTLY the pairs a full
+   * union re-resolve would add — so [[resolveUpdateFromEdges]]' output
+   * is the full union resolution at batch-sized cost. Write the result
+   * back as the new artifact (re-stamp with [[corpusFingerprint]] of
+   * the union).
    */
   def resolveUpdate(labels: DataFrame, indexSigs: DataFrame, newSigs: DataFrame,
                     numHashes: Int = 8, bands: Int = 4,
                     minEstJaccard: Double = 0.5, iterations: Int = 8,
                     broadcastBatchMaxRows: Long = 1L << 18): DataFrame = {
-    // The batch signature subtree otherwise appears ~7x across this plan
-    // (lshMatches' probe + banded side + sig re-attach, and
-    // lshCandidatePairs' four appearances) — persist it once. Both
-    // consumers are fully materialized by the EAGER localCheckpoint cut
-    // below, so the cache is freed before returning: a bare library
-    // caller invoking resolveUpdate per ingest cycle must not accumulate
+    // The batch signature subtree otherwise appears ~7x across the edge
+    // plan (the broadcast probe, the index leg's banded side + sig
+    // re-attach, and lshCandidatePairs' four appearances) — persist it
+    // once. batchEdges' EAGER cut fully materializes every consumer, so
+    // the cache is freed before returning: a bare library caller
+    // invoking resolveUpdate per ingest cycle must not accumulate
     // batch-sized storage blocks (the CacheLease registration stays so a
     // surrounding actor scope's deferred unpersist is a harmless no-op).
     val ns = CacheLease.persist(newSigs)
-    val nvi = lshMatches(ns, indexSigs, numHashes, bands, minEstJaccard,
-        broadcastBatchMaxRows)
-      .select(col("new_id").as("id_a"), col("index_id").as("id_b"))
-    val nvn = lshCandidatePairs(ns, numHashes, bands, minEstJaccard)
-      .select(col("id_a"), col("id_b"))
-    // One eager cut for the edge list: resolveUpdateFromEdges consumes it
-    // twice (the endpoints frame + the CC base checkpoint), and each
-    // consumption would re-run the banded index join. Batch-neighborhood-
-    // sized — the same localCheckpoint discipline as clusterLabels.
-    val edges = nvi.unionAll(nvn).localCheckpoint(true)
+    val edges = batchEdges(ns, indexSigs, None, numHashes, bands,
+      minEstJaccard, broadcastBatchMaxRows, maxCandidatesPerDoc = 0)
     ns.unpersist()
     resolveUpdateFromEdges(labels, edges, iterations)
   }
@@ -1090,49 +1124,6 @@ object Dedup {
         coalesce(col("keep_id"), col("id")).as("cluster_id"),
         coalesce(col("csize"), lit(1L)).as("cluster_size"),
         expr("1000000 div coalesce(csize, 1)").as("weight_u"))
-  }
-
-  /**
-   * Convergence-checked variant of [[clusterLabels]] — the scale path for
-   * graphs whose diameter is unknown: iterate until no label changes
-   * (min-label propagation converges in O(diameter) rounds) or
-   * `maxIterations`. Each round costs one eager materialization plus a
-   * constant-size aggregate for the changed-count — the only driver-side
-   * value is that scalar, so the loop is cluster-friendly. Prefer
-   * [[clusterLabels]]'s fixed rounds when results must be a pure function
-   * of the input (oracle parity); near-dup clusters are shallow, so 4
-   * rounds is usually converged anyway.
-   */
-  def clusterLabelsConverged(pairs: DataFrame, maxIterations: Int = 20): DataFrame = {
-    val edges = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
-      .unionAll(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
-      .localCheckpoint(true)
-    val (labels0, labels0Ids) = trackedCheckpoint(
-      edges.select(col("src").as("id")).distinct()
-        .select(col("id"), col("id").as("label")),
-      eager = true)
-    var labels = labels0
-    var prevIds = labels0Ids // superseded checkpoint blocks (see below)
-    var changed = 1L
-    var i = 0
-    while (changed > 0 && i < maxIterations) {
-      val (next, ids) = trackedCheckpoint(
-        edges.join(labels.withColumnRenamed("id", "dst2"),
-            col("dst") === col("dst2"))
-          .groupBy(col("src")).agg(min(col("label")).as("nbr_min"))
-          .join(labels, col("src") === col("id"))
-          .select(col("id"), least(col("label"), col("nbr_min")).as("label"),
-            (col("nbr_min") < col("label")).as("moved")),
-        eager = true) // eager: the changed-count is read this round
-      changed = next.filter(col("moved")).count()
-      // the (i-1)th labels frame is now unreachable by any future round —
-      // free its blocks instead of accumulating maxIterations copies
-      unpersistIds(next.sparkSession, prevIds)
-      prevIds = ids
-      labels = next.drop("moved")
-      i += 1
-    }
-    labels.select(col("id"), col("label").as("cluster_id"))
   }
 
   /**
@@ -1373,19 +1364,20 @@ object Dedup {
 }
 
 /**
- * Streaming soft-dedup INGEST GATE with within-stream linking (q115) —
- * the foreachBatch companion of [[Dedup.resolveUpdate]], closing the one
- * blindness of the stream-static gate shape (q114): two stream documents
- * duplicating EACH OTHER with no index counterpart. Each micro-batch is
- * matched three ways, all at batch-neighborhood cost:
+ * Streaming soft-dedup INGEST GATE with within-stream linking (q115),
+ * closing the one blindness of the stream-static gate shape (q114): two
+ * stream documents duplicating EACH OTHER with no index counterpart.
+ * Each micro-batch's edges come from [[Dedup.batchEdges]], the builder
+ * [[Dedup.resolveUpdate]] also uses, with all three legs at
+ * batch-neighborhood cost:
  *
- *  1. against the prebuilt index signatures — [[Dedup.lshMatches]]' one-
- *     sided join (never index×index);
- *  2. against the retained signatures of every PREVIOUS micro-batch —
+ *  1. against the prebuilt index signatures — the one-sided join (never
+ *     index×index);
+ *  2. against itself — [[Dedup.lshCandidatePairs]] over the batch alone,
+ *     the batch-internal leg;
+ *  3. against the retained signatures of every PREVIOUS micro-batch —
  *     the cross-batch leg (a dup pair split across micro-batches still
- *     links);
- *  3. against itself — [[Dedup.lshCandidatePairs]] over the batch alone,
- *     the batch-internal leg.
+ *     links).
  *
  * Post-drain, the accumulated edges fold into the persisted resolution
  * via [[Dedup.resolveUpdateFromEdges]], so the assigned weights are
@@ -1402,8 +1394,8 @@ object Dedup {
  * accumulate as a LIST of materialized frames unioned lazily, never
  * re-checkpointing old parts. Batch-side broadcasts ride
  * [[Dedup.lshMatches]]' measured row-bound pin (`broadcastBatchMaxRows`
- * — over the bound, shuffle joins), probed once per micro-batch and
- * shared by the index and retained legs. The
+ * — over the bound, shuffle joins), probed once per micro-batch by
+ * [[Dedup.batchEdges]] and shared by the index and retained legs. The
  * retained-leg cost grows with the stream's history; a long-lived
  * production gate periodically [[rebase]]s — fold the retained
  * signatures into the index and the edges into the resolution, hand a
@@ -1442,21 +1434,12 @@ final class SoftDedupGate(labels: DataFrame, indexSigs: DataFrame,
 
   /** foreachBatch body: fold one (idCol, textCol) micro-batch in. */
   def ingest(batch: DataFrame, textCol: String, idCol: String): Unit = synchronized {
+    // retained for the gate's life (later batches' cross-batch leg,
+    // rebase), so the batch signatures are cut, not persisted
     val sigs = Dedup.minHashSignatures(batch, textCol, idCol, numHashes, shingleLen)
       .localCheckpoint(true)
-    val small = Dedup.fitsBroadcast(sigs, broadcastBatchMaxRows)
-    def vs(side: DataFrame) =
-      Dedup.lshMatchesSized(sigs, side, numHashes, bands, minEstJaccard, small)
-        .select(col("new_id").as("id_a"), col("index_id").as("id_b"), col("est_jaccard"))
-    val vsIndex = vs(indexCut)
-    val vsPrev = sigParts.reduceOption(_ unionAll _).map(vs)
-    val vsSelf = Dedup.lshCandidatePairs(sigs, numHashes, bands, minEstJaccard)
-      .select(col("id_a"), col("id_b"), col("est_jaccard"))
-    val all = (Seq(vsIndex, vsSelf) ++ vsPrev).reduce(_ unionAll _)
-    val budgeted =
-      if (maxCandidatesPerDoc > 0) Dedup.capCandidatesSym(all, maxCandidatesPerDoc)
-      else all
-    edgeParts ::= budgeted.select(col("id_a"), col("id_b")).localCheckpoint(true)
+    edgeParts ::= Dedup.batchEdges(sigs, indexCut, sigParts.reduceOption(_ unionAll _),
+      numHashes, bands, minEstJaccard, broadcastBatchMaxRows, maxCandidatesPerDoc)
     sigParts ::= sigs
   }
 

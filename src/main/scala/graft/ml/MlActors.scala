@@ -212,18 +212,52 @@ class DedupActor extends Actor {
    *  false` — a stale artifact silently mis-weights, so the default
    *  fails loudly), else resolved in-session. */
   private def resolutionLabels(corpus: DataFrame, ctx: JobContext): DataFrame =
-    if (resolutionView.nonEmpty) {
-      val r = ctx.getView(resolutionView)
-      require(Seq("id", "keep_id").forall(r.columns.contains),
-        s"DedupActor($method): resolutionView '$resolutionView' is not a " +
-          s"resolution label frame (expected id, keep_id) — has " +
-          s"${r.columns.mkString(", ")}")
-      if (verifyResolution) verifyAgainst(r, corpus, ctx)
-      r
-    } else Dedup.resolveDuplicates(
+    if (resolutionView.nonEmpty) loadResolution(corpus, ctx, verifyResolution)
+    else resolveInSession(corpus)
+
+  private def resolveInSession(corpus: DataFrame): DataFrame =
+    Dedup.resolveDuplicates(
       Dedup.lshCandidatePairs(
         Dedup.minHashSignatures(corpus, textCol, idCol, numHashes, shingleLen),
         numHashes, bands, minEstJaccard), iterations)
+
+  /** `resolutionView`'s label frame, schema-checked, and fingerprint-
+   *  verified against `corpus` when `verify` holds. `corpus` is by-name
+   *  for the reason [[verifyAgainst]] gives. */
+  private def loadResolution(corpus: => DataFrame, ctx: JobContext,
+                             verify: Boolean): DataFrame = {
+    val r = ctx.getView(resolutionView)
+    require(Seq("id", "keep_id").forall(r.columns.contains),
+      s"DedupActor($method): resolutionView '$resolutionView' is not a " +
+        s"resolution label frame (expected id, keep_id) — has " +
+        s"${r.columns.mkString(", ")}")
+    if (verify) verifyAgainst(r, corpus, ctx)
+    r
+  }
+
+  /** The resolution an incremental fold starts from (resolve-update,
+   *  stream-gate): the same integrity gate as resolve-load — folding into
+   *  a stale or wrong-corpus artifact silently produces incorrect labels.
+   *  A signature-frame index carries no text to fingerprint, so without
+   *  a stored sidecar the check is only possible when `idx` is a corpus. */
+  private def indexResolution(idx: DataFrame, ctx: JobContext): DataFrame =
+    loadResolution(idx.select(col(idCol), col(textCol)), ctx,
+      verifyResolution && (fingerprintView.nonEmpty || !indexIsSignatures))
+
+  /** The canonical (id, mh0..mhN-1) columns of a signature frame. */
+  private def signatureCols: Seq[String] = "id" +: (0 until numHashes).map(j => s"mh$j")
+
+  /** `indexView`'s signatures: the loaded frame when `indexIsSignatures`
+   *  (it must carry the width this matcher is configured for — a
+   *  mismatched index yields silent zero-candidate output, so fail
+   *  loudly instead), else computed from the index corpus' text. */
+  private def indexSignatures(idx: DataFrame): DataFrame =
+    if (indexIsSignatures) {
+      require(signatureCols.toSet.subsetOf(idx.columns.toSet),
+        s"DedupActor($method): indexView '$indexView' is not a signature " +
+          s"frame with numHashes=$numHashes — has ${idx.columns.mkString(", ")}")
+      idx
+    } else Dedup.minHashSignatures(idx, textCol, idCol, numHashes, shingleLen)
 
   /** The integrity check behind `verifyResolution`: against the stored
    *  fingerprint sidecar when `fingerprintView` is set (two 1-row reads
@@ -259,11 +293,7 @@ class DedupActor extends Actor {
           Dedup.minHashSignatures(df, textCol, idCol, numHashes, shingleLen),
           numHashes, bands, minEstJaccard)
       case "simhash" => Dedup.simHash(df, textCol, idCol)
-      case "resolve" =>
-        Dedup.resolveDuplicates(
-          Dedup.lshCandidatePairs(
-            Dedup.minHashSignatures(df, textCol, idCol, numHashes, shingleLen),
-            numHashes, bands, minEstJaccard), iterations)
+      case "resolve" => resolveInSession(df)
       case "resolve-pairs" =>
         // resolution over an EXISTING pair view (id_a, id_b) — chain
         // behind any pair producer (minhash-lsh output, image-dedup,
@@ -323,26 +353,8 @@ class DedupActor extends Actor {
         // oracle proves it) without ever re-resolving the corpus. The
         // updated frame is the new artifact; re-stamp and persist it.
         val idx0 = ctx.getView(indexView)
-        val idxSigs0 =
-          if (indexIsSignatures) {
-            val expected = ("id" +: (0 until numHashes).map(j => s"mh$j")).toSet
-            require(expected.subsetOf(idx0.columns.toSet),
-              s"DedupActor(resolve-update): indexView '$indexView' is not a " +
-                s"signature frame with numHashes=$numHashes — has " +
-                s"${idx0.columns.mkString(", ")}")
-            idx0
-          } else Dedup.minHashSignatures(idx0, textCol, idCol, numHashes, shingleLen)
-        val r = ctx.getView(resolutionView)
-        require(Seq("id", "keep_id").forall(r.columns.contains),
-          s"DedupActor(resolve-update): resolutionView '$resolutionView' is " +
-            s"not a resolution label frame — has ${r.columns.mkString(", ")}")
-        // same integrity gate as resolve-load: folding a batch into a
-        // stale or wrong-corpus artifact silently produces incorrect
-        // labels — exactly what requireResolutionMatch exists to catch.
-        // A signature-frame index carries no text to fingerprint, so the
-        // check is only possible when indexView is a corpus.
-        if (verifyResolution && (fingerprintView.nonEmpty || !indexIsSignatures))
-          verifyAgainst(r, idx0.select(col(idCol), col(textCol)), ctx)
+        val idxSigs0 = indexSignatures(idx0)
+        val r = indexResolution(idx0, ctx)
         val batchSigs =
           Dedup.minHashSignatures(df, textCol, idCol, numHashes, shingleLen)
         val updated = Dedup.resolveUpdate(r, idxSigs0, batchSigs,
@@ -354,7 +366,7 @@ class DedupActor extends Actor {
         // next fold's index — refresh the sidecar in that domain with
         // `fingerprint` + `viewIsSignatures: true`).
         if (indexIsSignatures) {
-          val canon = ("id" +: (0 until numHashes).map(j => s"mh$j")).map(col)
+          val canon = signatureCols.map(col)
           updated.crossJoin(broadcast(Dedup.signatureFingerprint(
             idxSigs0.select(canon: _*).unionAll(batchSigs.select(canon: _*)))))
         } else updated.crossJoin(broadcast(Dedup.corpusFingerprint(
@@ -403,22 +415,10 @@ class DedupActor extends Actor {
           .agg(max(graft.functions.SketchAggregates
             .bloomContains(col("bf"), col("shingle")).cast("int")).as("contaminated"))
       case "incremental" =>
-        val idx = ctx.getView(indexView)
-        val idxSigs =
-          if (indexIsSignatures) {
-            // a loaded signature frame must carry the width this matcher
-            // is configured for — a mismatched index yields silent
-            // zero-candidate output, so fail loudly instead
-            val expected = ("id" +: (0 until numHashes).map(j => s"mh$j")).toSet
-            require(expected.subsetOf(idx.columns.toSet),
-              s"DedupActor(incremental): indexView '$indexView' is not a " +
-                s"signature frame with numHashes=$numHashes — has " +
-                s"${idx.columns.mkString(", ")}")
-            idx
-          } else Dedup.minHashSignatures(idx, textCol, idCol, numHashes, shingleLen)
         Dedup.lshMatches(
           Dedup.minHashSignatures(df, textCol, idCol, numHashes, shingleLen),
-          idxSigs, numHashes, bands, minEstJaccard, broadcastMaxRows)
+          indexSignatures(ctx.getView(indexView)), numHashes, bands,
+          minEstJaccard, broadcastMaxRows)
       case "stream-gate" | "stream-gate-rebase" =>
         // q115's shape as a pipeline step: drain the STREAMING `view`
         // through a SoftDedupGate (per micro-batch: one-sided LSH vs the
@@ -447,24 +447,8 @@ class DedupActor extends Actor {
         require(df.isStreaming,
           s"DedupActor($method): view '$view' must be a streaming view")
         val gIdx0 = ctx.getView(indexView)
-        val gIdxSigs =
-          if (indexIsSignatures) {
-            val expected = ("id" +: (0 until numHashes).map(j => s"mh$j")).toSet
-            require(expected.subsetOf(gIdx0.columns.toSet),
-              s"DedupActor(stream-gate): indexView '$indexView' is not a " +
-                s"signature frame with numHashes=$numHashes — has " +
-                s"${gIdx0.columns.mkString(", ")}")
-            gIdx0
-          } else Dedup.minHashSignatures(gIdx0, textCol, idCol, numHashes, shingleLen)
-        val gr = ctx.getView(resolutionView)
-        require(Seq("id", "keep_id").forall(gr.columns.contains),
-          s"DedupActor(stream-gate): resolutionView '$resolutionView' is " +
-            s"not a resolution label frame — has ${gr.columns.mkString(", ")}")
-        // same integrity gate as resolve-load/resolve-update: gating the
-        // stream on a stale or wrong-corpus artifact silently mis-weights.
-        // Only possible when the index view carries text to fingerprint.
-        if (verifyResolution && (fingerprintView.nonEmpty || !indexIsSignatures))
-          verifyAgainst(gr, gIdx0.select(col(idCol), col(textCol)), ctx)
+        val gIdxSigs = indexSignatures(gIdx0)
+        val gr = indexResolution(gIdx0, ctx)
         val gate = new graft.ml.SoftDedupGate(gr, gIdxSigs, numHashes,
           shingleLen, bands, minEstJaccard, iterations, broadcastMaxRows,
           maxCandidatesPerDoc)
@@ -704,7 +688,6 @@ class SimilaritySearchActor extends Actor {
         val qDocs = textQueryWhere.orElse(queryWhere).fold(docs)(docs.filter)
         Similarity.hybridRrfTopK(qDocs, docs, textIdCol, textCol,
           queries, corpus, idCol, vecCol, pool, k, rrfK, maxDfDenom,
-          if (dim > 0) Some(dim) else None,
           semantic = semanticIndex, numCentroids = numCentroids, nprobe = nprobe)
     })
   }

@@ -16,7 +16,11 @@ import org.apache.spark.sql.functions._
  * not per pair — at k×n pairs that cuts per-pair flops ~3×. The cosine is
  * still assembled as dot/(normA*normB) with left-to-right double
  * accumulation, so results are bit-identical to a per-pair computation
- * (and to the DuckDB oracle's expression).
+ * (and to the DuckDB oracle's expression). Every pair operator scores
+ * with the one native kernel behind [[dot]]/[[l2Norm]], whatever the
+ * vector width: a per-element `element_at` sum tree for a known width was
+ * measured slower than even the interpreted fold (its 64-term trees blow
+ * up janino compile time per stage).
  */
 object Similarity {
 
@@ -39,32 +43,11 @@ object Similarity {
 
   def cosine(a: Column, b: Column): Column = dot(a, b) / (l2Norm(a) * l2Norm(b))
 
-  /**
-   * Known-dimension variants: explicit element_at sums, bit-identical to
-   * the fold form (same left-assoc order). NOTE measured slower than the
-   * interpreted fold on this build — the 64-term trees blow up janino
-   * codegen compile time per stage — so the pair ops default to the fold;
-   * these stay for callers with small dims.
-   */
-  def dotFixed(a: Column, b: Column, dim: Int): Column =
-    (1 to dim).map(i => element_at(a, i).cast("double") * element_at(b, i).cast("double"))
-      .reduce(_ + _)
-
-  def l2NormFixed(a: Column, dim: Int): Column =
-    sqrt((1 to dim).map { i =>
-      val x = element_at(a, i).cast("double"); x * x
-    }.reduce(_ + _))
-
-  private def dotD(a: Column, b: Column, dim: Option[Int]): Column =
-    dim.map(dotFixed(a, b, _)).getOrElse(dot(a, b))
-  private def normD(a: Column, dim: Option[Int]): Column =
-    dim.map(l2NormFixed(a, _)).getOrElse(l2Norm(a))
-
   /** (id, v, norm) projection used by the pair joins. */
   private def withNorm(df: DataFrame, idCol: String, vecCol: String,
-                       idAs: String, vAs: String, nAs: String, dim: Option[Int]): DataFrame =
+                       idAs: String, vAs: String, nAs: String): DataFrame =
     df.select(col(idCol).cast("long").as(idAs), col(vecCol).as(vAs),
-      normD(col(vecCol), dim).as(nAs))
+      l2Norm(col(vecCol)).as(nAs))
 
   private def rankTopK(scored: DataFrame, k: Int): DataFrame =
     scored
@@ -82,14 +65,13 @@ object Similarity {
    * neighbor_id breaks exact ties.
    */
   def bruteForceTopK(queries: DataFrame, corpus: DataFrame,
-                     idCol: String, vecCol: String, k: Int,
-                     dim: Option[Int] = None): DataFrame = {
-    val q = withNorm(queries, idCol, vecCol, "query_id", "qv", "qn", dim)
-    val c = withNorm(corpus, idCol, vecCol, "neighbor_id", "cv", "cn", dim)
+                     idCol: String, vecCol: String, k: Int): DataFrame = {
+    val q = withNorm(queries, idCol, vecCol, "query_id", "qv", "qn")
+    val c = withNorm(corpus, idCol, vecCol, "neighbor_id", "cv", "cn")
     val scored = q.crossJoin(c)
       .filter(col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"),
-        (dotD(col("qv"), col("cv"), dim) / (col("qn") * col("cn"))).as("cos_sim"))
+        (dot(col("qv"), col("cv")) / (col("qn") * col("cn"))).as("cos_sim"))
     rankTopK(scored, k)
   }
 
@@ -106,19 +88,18 @@ object Similarity {
    * the same different-label filter applied to the cell candidates.
    */
   def hardNegatives(queries: DataFrame, corpus: DataFrame,
-                    idCol: String, vecCol: String, labelCol: String, k: Int,
-                    dim: Option[Int] = None): DataFrame = {
+                    idCol: String, vecCol: String, labelCol: String, k: Int): DataFrame = {
     val q = queries.select(col(idCol).cast("long").as("query_id"),
-      col(vecCol).as("qv"), normD(col(vecCol), dim).as("qn"),
+      col(vecCol).as("qv"), l2Norm(col(vecCol)).as("qn"),
       col(labelCol).cast("string").as("qlabel"))
     val c = corpus.select(col(idCol).cast("long").as("neighbor_id"),
-      col(vecCol).as("cv"), normD(col(vecCol), dim).as("cn"),
+      col(vecCol).as("cv"), l2Norm(col(vecCol)).as("cn"),
       col(labelCol).cast("string").as("nlabel"))
     val scored = q.crossJoin(c)
       .filter(col("query_id") =!= col("neighbor_id") &&
         col("qlabel") =!= col("nlabel"))
       .select(col("query_id"), col("neighbor_id"), col("nlabel").as("neg_label"),
-        (dotD(col("qv"), col("cv"), dim) / (col("qn") * col("cn"))).as("cos_sim"))
+        (dot(col("qv"), col("cv")) / (col("qn") * col("cn"))).as("cos_sim"))
     scored
       .withColumn("cos_r", round(col("cos_sim"), 6))
       .withColumn("rank", row_number().over(
@@ -200,7 +181,6 @@ object Similarity {
   def mmrTopK(queries: DataFrame, corpus: DataFrame,
               idCol: String, vecCol: String, k: Int = 3, poolSize: Int = 8,
               lambdaNum: Int = 7, lambdaDen: Int = 10,
-              dim: Option[Int] = None,
               semantic: String = "brute", numCentroids: Int = 16,
               nprobe: Int = 2): DataFrame = {
     require(k >= 1 && k <= poolSize, s"mmrTopK: need 1 <= k <= poolSize, got k=$k pool=$poolSize")
@@ -215,9 +195,9 @@ object Similarity {
     val pool = (semantic match {
       case "ivf" => ivfTopK(queries, corpus, idCol, vecCol, poolSize,
         numCentroids, nprobe)
-      case _ => bruteForceTopK(queries, corpus, idCol, vecCol, poolSize, dim)
+      case _ => bruteForceTopK(queries, corpus, idCol, vecCol, poolSize)
     }).localCheckpoint(false)
-    val c = withNorm(corpus, idCol, vecCol, "neighbor_id", "cv", "cn", dim)
+    val c = withNorm(corpus, idCol, vecCol, "neighbor_id", "cv", "cn")
     val pv = pool.select(col("query_id"), col("neighbor_id")).join(c, "neighbor_id")
     val a = pv.select(col("query_id"), col("neighbor_id").as("ida"),
       col("cv").as("va"), col("cn").as("na"))
@@ -228,7 +208,7 @@ object Similarity {
     def micro(c: Column): Column = round(c * lit(1000000.0)).cast("long")
     val psim = a.join(b, Seq("query_id")).filter(col("ida") =!= col("idb"))
       .select(col("query_id"), col("ida"), col("idb"),
-        micro(round(dotD(col("va"), col("vb"), dim) / (col("na") * col("nb")), 6)).as("sim_u"))
+        micro(round(dot(col("va"), col("vb")) / (col("na") * col("nb")), 6)).as("sim_u"))
       .localCheckpoint(false)
     val rel = pool.select(col("query_id"), col("neighbor_id"),
       micro(col("cos_sim")).as("rel_u"))
@@ -307,7 +287,6 @@ object Similarity {
                     vecIdCol: String, vecCol: String,
                     pool: Int = 10, k: Int = 5, rrfK: Int = 60,
                     maxDfDenom: Int = 10,
-                    dim: Option[Int] = None,
                     semantic: String = "brute",
                     numCentroids: Int = 16, nprobe: Int = 2): DataFrame = {
     require(Seq("brute", "ivf").contains(semantic),
@@ -345,7 +324,7 @@ object Similarity {
     // scored per query against the same deterministic index s3 grades.
     val semTop = semantic match {
       case "ivf" => ivfTopK(qVecs, cVecs, vecIdCol, vecCol, pool, numCentroids, nprobe)
-      case _     => bruteForceTopK(qVecs, cVecs, vecIdCol, vecCol, pool, dim)
+      case _     => bruteForceTopK(qVecs, cVecs, vecIdCol, vecCol, pool)
     }
     val semR = semTop
       .select(col("query_id"), col("neighbor_id"), col("rank").as("sem_rank"))
@@ -390,15 +369,14 @@ object Similarity {
    *  per-query work drops to ~corpus/2^numPlanes. */
   def lshTopK(queries: DataFrame, corpus: DataFrame, idCol: String, vecCol: String,
               k: Int, dim: Int, numPlanes: Int = 8): DataFrame = {
-    val d = Some(dim)
-    val q = withNorm(queries, idCol, vecCol, "query_id", "qv", "qn", d)
+    val q = withNorm(queries, idCol, vecCol, "query_id", "qv", "qn")
       .withColumn("bucket", lshBucket(col("qv"), dim, numPlanes))
-    val c = withNorm(corpus, idCol, vecCol, "neighbor_id", "cv", "cn", d)
+    val c = withNorm(corpus, idCol, vecCol, "neighbor_id", "cv", "cn")
       .withColumn("bucket", lshBucket(col("cv"), dim, numPlanes))
     val scored = q.join(c, Seq("bucket"))
       .filter(col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"),
-        (dotD(col("qv"), col("cv"), d) / (col("qn") * col("cn"))).as("cos_sim"))
+        (dot(col("qv"), col("cv")) / (col("qn") * col("cn"))).as("cos_sim"))
     rankTopK(scored, k)
   }
 
@@ -418,10 +396,9 @@ object Similarity {
   def lshMultiProbeTopK(queries: DataFrame, corpus: DataFrame, idCol: String,
                         vecCol: String, k: Int, dim: Int,
                         numPlanes: Int = 8): DataFrame = {
-    val d = Some(dim)
-    val q = withNorm(queries, idCol, vecCol, "query_id", "qv", "qn", d)
+    val q = withNorm(queries, idCol, vecCol, "query_id", "qv", "qn")
       .withColumn("bucket", lshBucket(col("qv"), dim, numPlanes))
-    val c = withNorm(corpus, idCol, vecCol, "neighbor_id", "cv", "cn", d)
+    val c = withNorm(corpus, idCol, vecCol, "neighbor_id", "cv", "cn")
       .withColumn("bucket", lshBucket(col("cv"), dim, numPlanes))
     val probeCols = col("bucket") +:
       (0 until numPlanes).map(p => col("bucket").bitwiseXOR(lit(1 << p)))
@@ -434,7 +411,7 @@ object Similarity {
       .join(q.select(col("query_id"), col("qv"), col("qn")), Seq("query_id"))
       .join(c.select(col("neighbor_id"), col("cv"), col("cn")), Seq("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"),
-        (dotD(col("qv"), col("cv"), d) / (col("qn") * col("cn"))).as("cos_sim"))
+        (dot(col("qv"), col("cv")) / (col("qn") * col("cn"))).as("cos_sim"))
     rankTopK(scored, k)
   }
 
@@ -1118,12 +1095,12 @@ object Similarity {
    * corpus. Output: (id_a < id_b, cos_sim) with cos ≥ threshold.
    */
   def nearDupPairs(df: DataFrame, idCol: String, vecCol: String, blockCol: String,
-                   threshold: Double, dim: Option[Int] = None): DataFrame = {
+                   threshold: Double): DataFrame = {
     val v = df.select(col(idCol).cast("long").as("id"), col(vecCol).as("v"),
-      normD(col(vecCol), dim).as("n"), col(blockCol).as("blk"))
+      l2Norm(col(vecCol)).as("n"), col(blockCol).as("blk"))
     v.as("a").join(v.as("b"), col("a.blk") === col("b.blk") && col("a.id") < col("b.id"))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
-        round(dotD(col("a.v"), col("b.v"), dim) / (col("a.n") * col("b.n")), 6).as("cos_r"))
+        round(dot(col("a.v"), col("b.v")) / (col("a.n") * col("b.n")), 6).as("cos_r"))
       .filter(col("cos_r") >= threshold)
       .select(col("id_a"), col("id_b"), col("cos_r").as("cos_sim"))
   }

@@ -6,7 +6,6 @@ import graft.core.Actor
 import graft.sql.SqlBase
 import org.apache.spark.sql.SparkSession
 import scala.jdk.CollectionConverters._
-import scala.util.matching.Regex
 
 /**
  * YAML/JSON pipeline-definition parser -> [[Pipeline]] AST.
@@ -27,8 +26,6 @@ import scala.util.matching.Regex
  * annotation-driven reflection injection; explicit `Actor.init(Map)`.
  */
 object PipelineBuilder {
-
-  private val VarRe: Regex = """\$\{([^}]+)\}""".r
 
   /** Built-in short aliases (extendable per pipeline via `aliases:`). */
   val defaultAliases: Map[String, String] = Map(
@@ -103,17 +100,22 @@ object PipelineBuilder {
                  appConfig: Map[String, String] = Map.empty,
                  baseDir: java.nio.file.Path = null)
                 (implicit spark: SparkSession): Pipeline = {
-    val root = format match {
-      case "yaml" | "yml" =>
-        toScala(new ObjectMapper(new YAMLFactory())
-          .readValue(text, classOf[java.util.Map[String, Object]])).asInstanceOf[Map[String, Any]]
-      case "json" =>
-        toScala(new ObjectMapper()
-          .readValue(text, classOf[java.util.Map[String, Object]])).asInstanceOf[Map[String, Any]]
-      case "xml" => XmlPipelineSupport.parse(text)
+    val root =
+      if (format.equalsIgnoreCase("xml")) XmlPipelineSupport.parse(text)
+      else readTree(text, format)
+    build(root, submitVars, appConfig, Option(baseDir))
+  }
+
+  /** The one YAML/JSON reader, for pipeline files and `include:`d job
+   *  files alike. `format` is a file extension, matched case-insensitively. */
+  private def readTree(text: String, format: String): Map[String, Any] = {
+    val mapper = format.toLowerCase match {
+      case "yaml" | "yml" => new ObjectMapper(new YAMLFactory())
+      case "json" => new ObjectMapper()
       case other => throw new IllegalArgumentException(s"unsupported pipeline format: $other")
     }
-    build(root, submitVars, appConfig, Option(baseDir))
+    toScala(mapper.readValue(text, classOf[java.util.Map[String, Object]]))
+      .asInstanceOf[Map[String, Any]]
   }
 
   // Jackson Java tree -> Scala collections
@@ -147,9 +149,9 @@ object PipelineBuilder {
         // variable referencing one ("dt=${a}") must pick up the evaluated
         // result, not the literal sql(...) text
         val evaluated = cur.map { case (k, v) =>
-          k -> (if (VarRe.findFirstIn(v).isEmpty) evalSql(v) else v)
+          k -> (if (SqlBase.VarRe.findFirstIn(v).isEmpty) evalSql(v) else v)
         }
-        val next = evaluated.map { case (k, v) => k -> resolveVars(v, evaluated) }
+        val next = evaluated.map { case (k, v) => k -> SqlBase.resolveVariables(v, evaluated) }
         changed = next != cur
         cur = next
         rounds += 1
@@ -172,10 +174,7 @@ object PipelineBuilder {
             val p = baseDir.map(_.resolve(inc.toString)).getOrElse(java.nio.file.Paths.get(inc.toString))
             val txt = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
             val ext = inc.toString.substring(inc.toString.lastIndexOf('.') + 1)
-            val mapper = if (ext.startsWith("y")) new ObjectMapper(new YAMLFactory()) else new ObjectMapper()
-            val sub = toScala(mapper.readValue(txt, classOf[java.util.Map[String, Object]]))
-              .asInstanceOf[Map[String, Any]]
-            buildJob(sub, aliases, resolvedVars, baseDir)
+            buildJob(readTree(txt, ext), aliases, resolvedVars, baseDir)
           case None => buildJob(m, aliases, resolvedVars, baseDir)
         }
       case other => throw new IllegalArgumentException(
@@ -207,7 +206,7 @@ object PipelineBuilder {
         val cls = aliases.getOrElse(actorName, actorName)
         val actor = Class.forName(cls).getDeclaredConstructor().newInstance().asInstanceOf[Actor]
         val props = flatten("", a.getOrElse("properties", Map.empty[String, Any]))
-          .map { case (k, v) => k -> resolveVars(v, vars) }
+          .map { case (k, v) => k -> SqlBase.resolveVariables(v, vars) }
         // sqlFile convenience: load relative to the pipeline file
         val propsWithFiles = props.map {
           case (k, v) if k.endsWith("File") && baseDir.isDefined && !java.nio.file.Paths.get(v).isAbsolute =>
@@ -241,9 +240,6 @@ object PipelineBuilder {
     case null => Map.empty
     case other => Map(prefix -> other.toString)
   }
-
-  def resolveVars(text: String, vars: Map[String, String]): String =
-    VarRe.replaceAllIn(text, m => Regex.quoteReplacement(vars.getOrElse(m.group(1), m.matched)))
 
   private def asMap(v: Option[Any]): Map[String, Any] = v match {
     case Some(m: Map[String @unchecked, Any @unchecked]) => m

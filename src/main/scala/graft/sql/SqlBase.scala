@@ -37,7 +37,8 @@ object SqlBase {
 
   private val SetRe: Regex = """(?is)^\s*set\s+([A-Za-z_][\w.]*)\s*=\s*(.+)$""".r
   private val SetRunRe: Regex = """(?is)^\s*setrun\s+([A-Za-z_][\w.]*)\s*=\s*(.+)$""".r
-  private val VarRe: Regex = """\$\{([^}]+)\}""".r
+  /** A `${var}` reference. */
+  private[graft] val VarRe: Regex = """\$\{([^}]+)\}""".r
   /** reference: common/SqlActor.scala:181-184 */
   private val QueryRe: Regex = """(?is)^\s*(select|with)\b.*""".r
   /** reference: common/SqlActor.scala:191-194 */

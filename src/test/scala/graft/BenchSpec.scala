@@ -172,6 +172,38 @@ class BenchSpec extends AnyFunSuite with Matchers {
       ((false, Map.empty))
   }
 
+  test("a run lands its record where it read its history, never over the default record") {
+    // replay of the overwrite: a run pointed at another history
+    // (SPARK_GRAFT_BENCH_HISTORY) used to land over docs/bench/latest.json,
+    // a record it never read or gated against
+    val dir = java.nio.file.Files.createTempDirectory("bench-hist-land")
+    val hist = dir.resolve("latest_c4.json")
+    val utf8 = java.nio.charset.StandardCharsets.UTF_8
+    val committed = java.nio.file.Paths.get("docs/bench/latest.json")
+    val committedBefore = java.nio.file.Files.readAllBytes(committed)
+    try {
+      val prior = """{"sf":"testdata/sf0.1","jvm":{"cpus":"4"},"queries":{"q3_distinct":0.2}}"""
+      java.nio.file.Files.write(hist, prior.getBytes(utf8))
+      val record = """{"sf":"testdata/sf0.1","jvm":{"cpus":"4"},"queries":{"q3_distinct":0.19}}"""
+      Bench.landHistory(hist.toString, record, veto = None) shouldBe true
+      new String(java.nio.file.Files.readAllBytes(hist), utf8) shouldBe record
+      java.nio.file.Files.readAllBytes(committed) shouldBe committedBefore
+      // the landed record is the history the next run reads and gates on
+      Bench.readHistory(hist.toString, "testdata/sf0.1", "4") shouldBe
+        ((false, Map("q3_distinct" -> 0.19)))
+      // a vetoed landing leaves the history as it was
+      Bench.landHistory(hist.toString, prior, veto = Some("host_degraded")) shouldBe false
+      new String(java.nio.file.Files.readAllBytes(hist), utf8) shouldBe record
+      // a history whose directory does not exist keeps no record
+      val absent = dir.resolve("no-such-dir").resolve("latest.json")
+      Bench.landHistory(absent.toString, record, veto = None) shouldBe false
+      absent.toFile.exists shouldBe false
+    } finally {
+      java.nio.file.Files.deleteIfExists(hist)
+      java.nio.file.Files.deleteIfExists(dir)
+    }
+  }
+
   test("marker reference levels derive from the history, literals only as fallback") {
     // with a committed history, every panel member's reference IS that
     // history's value — the hard-coded literal is dead weight there, so

@@ -92,6 +92,42 @@ class PipelineBuilderSpec extends SparkSpec {
     spark.table("inc_view").count() shouldBe 25
   }
 
+  test("include: the job file's extension is matched case-insensitively") {
+    implicit val s = spark
+    val dir = tmpDir("pbi-case")
+    writeFile(dir, "job1.YAML",
+      """name: upper
+        |actions:
+        |  - name: r
+        |    actor: sql
+        |    properties: { sqlString: "select 1 as one" }
+        |""".stripMargin)
+    val f = writeFile(dir, "main.yaml",
+      """name: with-upper-include
+        |jobs:
+        |  - include: job1.YAML
+        |""".stripMargin)
+    val job = PipelineBuilder.fromFile(f).jobs.head
+    job.name shouldBe "upper"
+    job.actions.map(_.name) shouldBe Seq("r")
+  }
+
+  test("include: a job file that is not yaml/yml/json fails with the format error") {
+    implicit val s = spark
+    val dir = tmpDir("pbi-txt")
+    // valid JSON content: only the extension is wrong
+    writeFile(dir, "job.txt",
+      """{"name": "txt", "actions": [{"name": "r", "actor": "sql",
+        |  "properties": {"sqlString": "select 1 as one"}}]}""".stripMargin)
+    val f = writeFile(dir, "main.yaml",
+      """name: with-txt-include
+        |jobs:
+        |  - include: job.txt
+        |""".stripMargin)
+    (the[IllegalArgumentException] thrownBy PipelineBuilder.fromFile(f))
+      .getMessage should include("unsupported pipeline format: txt")
+  }
+
   test("xml pipeline parses and runs end-to-end") {
     implicit val s = spark
     val dir = tmpDir("pbx")
