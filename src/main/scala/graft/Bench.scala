@@ -161,6 +161,13 @@ object Bench {
       (true, Map.empty)
     }
 
+  /** The committed per-query history a run at `cpus` cores reads, gates
+   *  against and lands over by default: one record per core count, so a
+   *  run on a 4-core host has a same-regime history ([[readHistory]]
+   *  refuses another core count's). 32 cores keeps the original name. */
+  private[graft] def defaultHistory(cpus: String): String =
+    if (cpus == "32") "docs/bench/latest.json" else s"docs/bench/latest_c$cpus.json"
+
   private def writeRecord(path: String, json: String): Boolean =
     try {
       java.nio.file.Files.write(java.nio.file.Paths.get(path),
@@ -333,7 +340,7 @@ object Bench {
     // whether or not the query warmed. History must be same-sf (scale
     // factors differ by 10x; compared by directory basename) and is read
     // BEFORE this run lands its own record.
-    val histFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_HISTORY", "docs/bench/latest.json")
+    val histFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_HISTORY", defaultHistory(cpus))
     // A history recorded at ANOTHER scale factor can't gate this run —
     // but it must also not be OVERWRITTEN by it (a full-catalog sf1 run
     // landing itself would silently destroy the committed sf0.1
@@ -601,7 +608,7 @@ object Bench {
     // Durability: the round record's stdout tail truncates at ~2 KB, so
     // only ~50 of 240+ per-query timings survive into BENCH_r{N}.json.
     // ALSO land the full detail as the history file this run read
-    // (docs/bench/latest.json by default, committed at round close as
+    // ([[defaultHistory]] by default, committed at round close as
     // r{N}.json) so cross-round per-query regression analysis never
     // depends on a /tmp file the next run overwrites. Full-catalog runs
     // only — a subset A/B probe must not clobber the round's record.

@@ -697,7 +697,7 @@ object Queries {
     // tier's already-scored est_jaccard, not a second LSH pass
     // One eager cut for the scored candidate tier: candFull feeds the
     // raw tier, the est tier, AND ngramJaccard's three pair consumers —
-    // without it the band self-join + double sig re-attach executes per
+    // without it the band self-join executes per
     // consumer (exchange reuse does not span the differently-projected
     // branches). Pair-list-sized, same discipline as resolveUpdate's
     // edge cut.

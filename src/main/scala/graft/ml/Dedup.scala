@@ -146,16 +146,6 @@ object Dedup {
       element_at(col("mh"), j + 1).as(s"mh$j")): _*)
   }
 
-  /**
-   * LSH banding over a MinHash signature frame: signature split into `bands`
-   * bands of `rowsPerBand` hashes; docs sharing any band-bucket become
-   * candidate pairs. Self-join happens only within (band, bucket) groups —
-   * the blow-up is bounded by bucket size, not corpus size. Output:
-   * (id_a < id_b, est_jaccard = matching-component fraction).
-   */
-  /** (id, band, bucket) expansion of a signature frame — ids-only, so the
-   *  band join exchange stays narrow. Shared by the self-join
-   *  (lshCandidatePairs) and the incremental one-sided join (lshMatches). */
   /** The (band, bucket) struct array for one signature row — explode-ready;
    *  shared by [[bandedFrame]] and callers that must band while KEEPING
    *  other columns (e.g. a streaming row carrying its own signature). */
@@ -167,45 +157,103 @@ object Dedup {
     }: _*)
   }
 
+  /** (id, band, bucket) expansion of a signature frame, md5 bucket per
+   *  band — the banding the stream-static queries (q90, q114) join on.
+   *  The pair kernels band with [[bandSignatures]] instead. */
   private[graft] def bandedFrame(signatures: DataFrame, numHashes: Int, bands: Int): DataFrame =
     signatures
       .select(col("id"), explode(bandStructs(numHashes, bands)).as("bb"))
       .select(col("id"), col("bb.band").as("band"), col("bb.bucket").as("bucket"))
 
+  /** The banded form the LSH pair kernel joins: one row per (document,
+   *  band) — `id`, `band`, `key` (xxhash64 of the band's MinHash values)
+   *  and the document's FULL signature `mh0..mh{k-1}` — all longs but
+   *  the int band. Carrying the signature on every banded row is what
+   *  lets [[bandPairs]] score and de-duplicate a pair inside the join. A
+   *  caller that matches many batches against one side (the
+   *  [[SoftDedupGate]] index) cuts this frame once. */
+  private[graft] def bandSignatures(signatures: DataFrame, numHashes: Int,
+                                    bands: Int): DataFrame = {
+    require(numHashes % bands == 0, "numHashes must be divisible by bands")
+    val rowsPerBand = numHashes / bands
+    val mhCols = (0 until numHashes).map(j => col(s"mh$j").cast("long").as(s"mh$j"))
+    val keys = (0 until bands).map(b =>
+      xxhash64((b * rowsPerBand until (b + 1) * rowsPerBand).map(j => col(s"mh$j").cast("long")): _*))
+    signatures.select(col("id") +: posexplode(array(keys: _*)).as(Seq("band", "key")) +: mhCols: _*)
+  }
+
+  /**
+   * The LSH pair kernel: joins two [[bandSignatures]] frames on (band,
+   * key) and emits each matching pair ONCE, from its FIRST matching band
+   * — the lowest band whose MinHash values are all equal, computed from
+   * the two signatures on the joined row. A pair that shares several
+   * bands meets in each of them and is kept only in the first, so no
+   * pair `distinct` runs; `est_jaccard` (the matching-hash fraction) is
+   * scored from the same row, so no signature re-attach join runs. The
+   * band-equality check also makes the rare xxhash64 key collision
+   * harmless: a pair whose band values differ never passes it.
+   * `ordered` keeps `id_a < id_b` (the self-join); otherwise every
+   * non-null `a` × `b` pair. `pinA` broadcasts `a` (a batch the caller
+   * has probed small), so `b` streams through the join with no
+   * exchange. Output: (id_a, id_b, est_jaccard).
+   *
+   * Scale shape, per document at the defaults (8 hashes, 4 bands;
+   * UnsafeRow bytes before compression). The previous design joined
+   * ids-only banded rows (id, band, md5 bucket: 64 B), distinct-ed the
+   * pairs, then re-attached both signatures by id (96 B per signature
+   * row): a shuffled self-join moved 4 × 64 B × 2 sides + 2 × 96 B =
+   * 704 B per document plus ~150 B per candidate pair (the distinct and
+   * two re-attach exchanges). This kernel moves 4 × 96 B × 2 sides =
+   * 768 B per document and nothing per pair, so it moves fewer bytes
+   * once a document averages more than 0.42 candidate pairs (64 / 152) —
+   * and chance band collisions densify with corpus scale. Against a
+   * broadcast batch
+   * ([[lshMatches]]) the index side streams ONCE with zero shuffle
+   * bytes, where the previous design streamed it twice (band join and
+   * re-attach) and shuffled every pair through the distinct.
+   */
+  private[graft] def bandPairs(a: DataFrame, b: DataFrame, numHashes: Int,
+                               bands: Int, minEstJaccard: Double,
+                               ordered: Boolean, pinA: Boolean): DataFrame = {
+    val rowsPerBand = numHashes / bands
+    def same(j: Int): Column = col(s"a.mh$j") === col(s"b.mh$j")
+    val firstBand = (0 until bands).foldRight(lit(-1)) { (bd, later) =>
+      when((bd * rowsPerBand until (bd + 1) * rowsPerBand).map(same).reduce(_ && _), bd)
+        .otherwise(later)
+    }
+    val est = (0 until numHashes).map(j => when(same(j), 1).otherwise(0))
+      .reduce(_ + _).cast("double") / numHashes
+    val ids =
+      if (ordered) col("a.id") < col("b.id")
+      else col("a.id").isNotNull && col("b.id").isNotNull
+    (if (pinA) broadcast(a) else a).as("a")
+      .join(b.as("b"), col("a.band") === col("b.band") && col("a.key") === col("b.key") && ids)
+      .filter(firstBand === col("a.band"))
+      .select(col("a.id").as("id_a"), col("b.id").as("id_b"), est.as("est_jaccard"))
+      .filter(col("est_jaccard") >= minEstJaccard)
+  }
+
+  /**
+   * LSH banding over a MinHash signature frame: signature split into `bands`
+   * bands of `rowsPerBand` hashes; docs sharing any band become candidate
+   * pairs. Self-join happens only within (band, key) groups — the
+   * blow-up is bounded by bucket size, not corpus size. Output:
+   * (id_a < id_b, est_jaccard = matching-component fraction), each pair
+   * once ([[bandPairs]]).
+   *
+   * The signature subtree appears twice in this plan (both band-join
+   * sides). Deliberately NOT cached here: a lazy localCheckpoint of
+   * `signatures` was measured ~20% SLOWER end-to-end at bench scale
+   * (storage materialization breaks pipelining and adds a blocking
+   * pass), and recomputing the narrow flatMap+groupBy chain is cheap. At
+   * true corpus scale, callers should persist the signature frame
+   * themselves before fanning out — the API takes a DataFrame precisely
+   * so that choice stays with the caller.
+   */
   def lshCandidatePairs(signatures: DataFrame, numHashes: Int = 8,
                         bands: Int = 4, minEstJaccard: Double = 0.5): DataFrame = {
-    require(numHashes % bands == 0, "numHashes must be divisible by bands")
-    val mhCols = (0 until numHashes).map(j => col(s"mh$j"))
-    // The band self-join carries IDS ONLY: at corpus scale the banded frame
-    // is corpus×bands rows, and shipping the full signature struct through
-    // that exchange multiplies shuffle bytes by the signature width. Join
-    // narrow, distinct the id pairs (a pair sharing several buckets
-    // collapses BEFORE any per-pair work), then re-attach the two
-    // signatures by id to score est_jaccard.
-    //
-    // The signature subtree appears 4x in this plan (both band-join sides
-    // + both re-attach sides). Deliberately NOT cached here: a lazy
-    // localCheckpoint of `signatures` was measured ~20% SLOWER end-to-end
-    // at bench scale (storage materialization breaks pipelining and adds
-    // a blocking pass), and recomputing the narrow flatMap+groupBy chain
-    // is cheap. At true corpus scale, callers should persist the
-    // signature frame themselves before fanning out — the API takes a
-    // DataFrame precisely so that choice stays with the caller.
-    val banded = bandedFrame(signatures, numHashes, bands)
-    val idPairs = banded.as("a")
-      .join(banded.as("b"),
-        col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket") &&
-          col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .distinct()
-    val sigs = signatures.select(col("id"), struct(mhCols: _*).as("sig"))
-    val matches = (0 until numHashes).map(j => when(col(s"sa.sig.mh$j") === col(s"sb.sig.mh$j"), 1).otherwise(0))
-    idPairs
-      .join(sigs.as("sa"), col("id_a") === col("sa.id"))
-      .join(sigs.as("sb"), col("id_b") === col("sb.id"))
-      .select(col("id_a"), col("id_b"),
-        (matches.reduce(_ + _).cast("double") / numHashes).as("est_jaccard"))
-      .filter(col("est_jaccard") >= minEstJaccard)
+    val banded = bandSignatures(signatures, numHashes, bands)
+    bandPairs(banded, banded, numHashes, bands, minEstJaccard, ordered = true, pinA = false)
   }
 
   /**
@@ -216,55 +264,27 @@ object Dedup {
    * are signature frames from [[minHashSignatures]] /
    * [[signaturesFromShingles]]. Emits (new_id, index_id, est_jaccard).
    *
-   * Scale shape: both sides band-expand ids-only and join keyed on
-   * (band, bucket). The batch side is broadcast EXPLICITLY when it is
-   * small (`broadcastBatchMaxRows`, measured with a bounded limit+count
-   * probe) — pinned rather than left to the planner, because a stats
-   * misestimate on the batch subtree would silently degrade this to
-   * shuffling the INDEX on (band, bucket), re-paying at every ingest the
-   * work the prebuilt index exists to amortize. The banded expansion is
-   * rows×bands ids-only tuples (~60 B each), so the default threshold
-   * (256k batch rows, 4 bands) broadcasts ≤ ~60 MB. Pass 0 to disable
-   * the probe and leave the choice to the planner (e.g. when the caller
-   * knows the batch is huge).
+   * Scale shape: both sides band with their signatures
+   * ([[bandSignatures]]) and join keyed on (band, key) in the one pair
+   * kernel ([[bandPairs]]). The batch side is broadcast EXPLICITLY when
+   * it is small (`broadcastBatchMaxRows`, measured with a bounded
+   * limit+count probe) — pinned rather than left to the planner,
+   * because a stats misestimate on the batch subtree would silently
+   * degrade this to shuffling the INDEX on (band, key), re-paying at
+   * every ingest the work the prebuilt index exists to amortize. Pinned,
+   * the index streams through one join with no exchange. A banded batch
+   * row is ~96 B, so the default threshold (256k batch rows, 4 bands)
+   * broadcasts ≤ ~100 MB. Pass 0 to disable the probe and leave the
+   * choice to the planner (e.g. when the caller knows the batch is
+   * huge).
    */
   def lshMatches(newSigs: DataFrame, indexSigs: DataFrame, numHashes: Int = 8,
                  bands: Int = 4, minEstJaccard: Double = 0.5,
                  broadcastBatchMaxRows: Long = 1L << 18): DataFrame =
-    lshMatchesSized(newSigs, indexSigs, numHashes, bands, minEstJaccard,
-      fitsBroadcast(newSigs, broadcastBatchMaxRows))
-
-  /** [[lshMatches]] with the batch-size decision already made: `small`
-   *  pins every batch-derived frame broadcast-side. For a caller that
-   *  matches ONE batch against several sides ([[batchEdges]]' index and
-   *  retained legs) and so probes the batch once, not once per leg. */
-  private[graft] def lshMatchesSized(newSigs: DataFrame, indexSigs: DataFrame,
-      numHashes: Int, bands: Int, minEstJaccard: Double,
-      small: Boolean): DataFrame = {
-    require(numHashes % bands == 0, "numHashes must be divisible by bands")
-    val mhCols = (0 until numHashes).map(j => col(s"mh$j"))
-    val bandedNew = bandedFrame(newSigs, numHashes, bands)
-    // `pin` marks every batch-derived frame broadcast-side, so the index
-    // is STREAMED through all three of its appearances (band join + the
-    // two sig re-attaches collapse to: band join, then one streamed pass
-    // over the index signatures). Without the second pin the re-attach
-    // would sort-merge on id and shuffle the full index anyway.
-    def pin(df: DataFrame): DataFrame = if (small) broadcast(df) else df
-    val idPairs = pin(bandedNew).as("a")
-      .join(bandedFrame(indexSigs, numHashes, bands).as("b"),
-        col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket"))
-      .select(col("a.id").as("new_id"), col("b.id").as("index_id"))
-      .distinct()
-    def sigs(df: DataFrame) = df.select(col("id"), struct(mhCols: _*).as("sig"))
-    val matches = (0 until numHashes).map(j =>
-      when(col(s"sa.sig.mh$j") === col(s"sb.sig.mh$j"), 1).otherwise(0))
-    pin(pin(idPairs)
-        .join(sigs(newSigs).as("sa"), col("new_id") === col("sa.id")))
-      .join(sigs(indexSigs).as("sb"), col("index_id") === col("sb.id"))
-      .select(col("new_id"), col("index_id"),
-        (matches.reduce(_ + _).cast("double") / numHashes).as("est_jaccard"))
-      .filter(col("est_jaccard") >= minEstJaccard)
-  }
+    bandPairs(bandSignatures(newSigs, numHashes, bands),
+      bandSignatures(indexSigs, numHashes, bands), numHashes, bands,
+      minEstJaccard, ordered = false, pinA = fitsBroadcast(newSigs, broadcastBatchMaxRows))
+      .select(col("id_a").as("new_id"), col("id_b").as("index_id"), col("est_jaccard"))
 
   /**
    * Boilerplate-span stripping: removes every token position covered by a
@@ -1009,19 +1029,22 @@ object Dedup {
    * The per-batch EDGE SET of the incremental resolution lifecycle — the
    * one builder behind [[resolveUpdate]] (d26) and
    * [[SoftDedupGate.ingest]] (q115/q116). The batch signatures `sigs`
-   * are matched, in this leg order:
+   * are banded once ([[bandSignatures]]) and matched, in this leg order:
    *
-   *  1. against `index` — [[lshMatchesSized]]' one-sided join (never
-   *     index×index);
-   *  2. against themselves — [[lshCandidatePairs]], the batch-internal
-   *     leg;
+   *  1. against `indexBands` — the index in banded form, one-sided
+   *     (never index×index);
+   *  2. against themselves — the batch-internal leg, `id_a < id_b`;
    *  3. against `retained` when given — the gate's signatures of every
    *     PREVIOUS micro-batch, one-sided like the index leg.
    *
-   * One broadcast-size probe of `sigs` ([[fitsBroadcast]] at
-   * `broadcastBatchMaxRows`) decides the pin for both one-sided legs.
-   * `maxCandidatesPerDoc` > 0 keeps each document's top candidates over
-   * the symmetrized union ([[capCandidatesSym]]); 0 keeps every pair.
+   * Every leg is the one pair kernel ([[bandPairs]]), so no leg runs a
+   * pair `distinct` or a signature re-attach. One broadcast-size probe of
+   * `sigs` ([[fitsBroadcast]] at `broadcastBatchMaxRows`) decides the
+   * pin: a small batch is broadcast in all three legs (the batch-internal
+   * self-join too), so the index and retained sides stream with no
+   * exchange. `maxCandidatesPerDoc` > 0 keeps each document's top
+   * candidates over the symmetrized union ([[capCandidatesSym]]); 0
+   * keeps every pair.
    *
    * The (id_a, id_b) result is cut EAGERLY: [[resolveUpdateFromEdges]]
    * consumes an edge list twice (the endpoints frame + the CC base
@@ -1030,21 +1053,27 @@ object Dedup {
    * as [[clusterLabels]]. The probe and every leg read `sigs`, so the
    * caller materializes it first and owns that storage.
    */
-  private[graft] def batchEdges(sigs: DataFrame, index: DataFrame,
+  private[graft] def batchEdges(sigs: DataFrame, indexBands: DataFrame,
       retained: Option[DataFrame], numHashes: Int, bands: Int,
       minEstJaccard: Double, broadcastBatchMaxRows: Long,
       maxCandidatesPerDoc: Int): DataFrame = {
     val small = fitsBroadcast(sigs, broadcastBatchMaxRows)
-    def vs(side: DataFrame) =
-      lshMatchesSized(sigs, side, numHashes, bands, minEstJaccard, small)
-        .select(col("new_id").as("id_a"), col("index_id").as("id_b"), col("est_jaccard"))
-    val self = lshCandidatePairs(sigs, numHashes, bands, minEstJaccard)
-      .select(col("id_a"), col("id_b"), col("est_jaccard"))
-    val all = (Seq(vs(index), self) ++ retained.map(vs)).reduce(_ unionAll _)
+    val batchBands = bandSignatures(sigs, numHashes, bands)
+    def leg(sideBands: DataFrame, ordered: Boolean) =
+      bandPairs(batchBands, sideBands, numHashes, bands, minEstJaccard, ordered, pinA = small)
+    val legs = Seq(leg(indexBands, ordered = false), leg(batchBands, ordered = true)) ++
+      retained.map(r => leg(bandSignatures(r, numHashes, bands), ordered = false))
+    val all = legs.reduce(_ unionAll _)
     val budgeted =
       if (maxCandidatesPerDoc > 0) capCandidatesSym(all, maxCandidatesPerDoc)
       else all
-    budgeted.select(col("id_a"), col("id_b")).localCheckpoint(true)
+    // With the batch broadcast no leg has an exchange, so the result has
+    // one partition per streamed input partition (index cut, batch,
+    // every retained part), and each later consumer pays a task for each.
+    // Coalescing (narrow) to the session's shuffle width keeps the cut
+    // as narrow as a shuffled edge list would be.
+    val width = sigs.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+    budgeted.select(col("id_a"), col("id_b")).coalesce(width).localCheckpoint(true)
   }
 
   /**
@@ -1063,17 +1092,18 @@ object Dedup {
                     numHashes: Int = 8, bands: Int = 4,
                     minEstJaccard: Double = 0.5, iterations: Int = 8,
                     broadcastBatchMaxRows: Long = 1L << 18): DataFrame = {
-    // The batch signature subtree otherwise appears ~7x across the edge
-    // plan (the broadcast probe, the index leg's banded side + sig
-    // re-attach, and lshCandidatePairs' four appearances) — persist it
-    // once. batchEdges' EAGER cut fully materializes every consumer, so
-    // the cache is freed before returning: a bare library caller
-    // invoking resolveUpdate per ingest cycle must not accumulate
-    // batch-sized storage blocks (the CacheLease registration stays so a
-    // surrounding actor scope's deferred unpersist is a harmless no-op).
+    // The batch signature subtree otherwise appears 4x across the edge
+    // plan (the broadcast probe, the index leg's banded side, both sides
+    // of the batch-internal leg) — persist it once. batchEdges' EAGER
+    // cut fully materializes every consumer, so the cache is freed
+    // before returning: a bare library caller invoking resolveUpdate per
+    // ingest cycle must not accumulate batch-sized storage blocks (the
+    // CacheLease registration stays so a surrounding actor scope's
+    // deferred unpersist is a harmless no-op). The index side is read
+    // once, by the index leg's band join.
     val ns = CacheLease.persist(newSigs)
-    val edges = batchEdges(ns, indexSigs, None, numHashes, bands,
-      minEstJaccard, broadcastBatchMaxRows, maxCandidatesPerDoc = 0)
+    val edges = batchEdges(ns, bandSignatures(indexSigs, numHashes, bands), None,
+      numHashes, bands, minEstJaccard, broadcastBatchMaxRows, maxCandidatesPerDoc = 0)
     ns.unpersist()
     resolveUpdateFromEdges(labels, edges, iterations)
   }
@@ -1373,8 +1403,7 @@ object Dedup {
  *
  *  1. against the prebuilt index signatures — the one-sided join (never
  *     index×index);
- *  2. against itself — [[Dedup.lshCandidatePairs]] over the batch alone,
- *     the batch-internal leg;
+ *  2. against itself — the batch-internal leg;
  *  3. against the retained signatures of every PREVIOUS micro-batch —
  *     the cross-batch leg (a dup pair split across micro-batches still
  *     links).
@@ -1384,11 +1413,16 @@ object Dedup {
  * EXACTLY what the next d26 maintenance pass would assign — the q115
  * oracle re-resolves the whole union corpus and hash-matches them.
  *
- * Scale shape: the index signatures are materialized ONCE per gate —
- * an eager localCheckpoint in the constructor, before the first
- * micro-batch — and held for the gate's life: every ingest's index leg
- * (band join + signature re-attach) and [[rebase]] read that cut, so
- * no micro-batch re-scans, re-shingles or re-groups the index source.
+ * Scale shape: the index side is materialized ONCE per gate, already
+ * BANDED ([[Dedup.bandSignatures]]: one row per (document, band) with
+ * the full signature) — an eager localCheckpoint in the constructor,
+ * before the first micro-batch — and held for the gate's life: every
+ * ingest's index leg is one join of the broadcast banded batch against
+ * that cut, with no exchange, no pair distinct and no signature
+ * re-attach, and [[rebase]] reads the signatures back from its band-0
+ * rows. No micro-batch re-scans, re-shingles, re-groups or re-bands the
+ * index source. The cut holds `bands` rows per index document (~96 B
+ * each at the defaults) where a signature cut held one (~80 B).
  * Per-batch frames are localCheckpointed too (lineage truncation — the
  * iterative-accumulation discipline of [[Dedup.clusterLabels]]); parts
  * accumulate as a LIST of materialized frames unioned lazily, never
@@ -1423,10 +1457,11 @@ final class SoftDedupGate(labels: DataFrame, indexSigs: DataFrame,
     broadcastBatchMaxRows: Long = 1L << 18,
     maxCandidatesPerDoc: Int = 0) extends Serializable {
   import org.apache.spark.sql.functions.col
-  // the index side is fixed for the gate's life: cut it once, here, so
-  // no ingest re-runs the index plan (a text index otherwise re-scans
-  // and re-shingles the corpus twice per micro-batch)
-  private val indexCut = indexSigs.localCheckpoint(true)
+  // the index side is fixed for the gate's life: cut it once, here, in
+  // the banded form every ingest's index leg joins, so no ingest re-runs
+  // the index plan or re-bands it
+  private[graft] val indexBands =
+    Dedup.bandSignatures(indexSigs, numHashes, bands).localCheckpoint(true)
   // appended by the stream-execution thread inside foreachBatch, read by
   // the caller after awaitTermination; all access synchronized
   private var edgeParts: List[DataFrame] = Nil
@@ -1438,7 +1473,7 @@ final class SoftDedupGate(labels: DataFrame, indexSigs: DataFrame,
     // rebase), so the batch signatures are cut, not persisted
     val sigs = Dedup.minHashSignatures(batch, textCol, idCol, numHashes, shingleLen)
       .localCheckpoint(true)
-    edgeParts ::= Dedup.batchEdges(sigs, indexCut, sigParts.reduceOption(_ unionAll _),
+    edgeParts ::= Dedup.batchEdges(sigs, indexBands, sigParts.reduceOption(_ unionAll _),
       numHashes, bands, minEstJaccard, broadcastBatchMaxRows, maxCandidatesPerDoc)
     sigParts ::= sigs
   }
@@ -1489,6 +1524,9 @@ final class SoftDedupGate(labels: DataFrame, indexSigs: DataFrame,
    *  [[Dedup.signatureFingerprint]] directly) and the next drain
    *  verifies the pair with two 1-row reads before trusting it. */
   def rebase(): (DataFrame, DataFrame) = synchronized {
+    // every index row has exactly one band-0 row carrying its signature
+    val indexCut = indexBands.filter(col("band") === 0)
+      .select(col("id") +: (0 until numHashes).map(j => col(s"mh$j")): _*)
     val newIndex = (indexCut :: sigParts.reverse).reduce(_ unionAll _)
     (newIndex, updatedLabels().crossJoin(
       org.apache.spark.sql.functions.broadcast(

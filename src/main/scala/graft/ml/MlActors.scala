@@ -27,8 +27,7 @@ import org.apache.spark.sql.functions._
  *  est_jaccard), never an index×index pair;
  *  index-build: emits the MinHash signature frame (id, mh0..mh{k-1}) of
  *  `view` — the persistable dedup index. Write it once (parquet, or a
- *  catalog table bucketed by id so large-batch signature re-attach joins
- *  co-locate), then feed it back to `incremental` in ANY later session
+ *  catalog table bucketed by id), then feed it back to `incremental` in ANY later session
  *  via `indexView` + `indexIsSignatures: true`: the corpus is never
  *  re-shingled/re-hashed, which is the entire economics of continuous
  *  ingestion (per-batch cost against an already-paid index);

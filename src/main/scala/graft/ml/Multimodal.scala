@@ -348,8 +348,8 @@ object Multimodal {
    * at n >> 2^16, where chance candidates dwarf real pairs). Same
    * blocking idea as text MinHash-LSH ([[Dedup.lshCandidatePairs]]):
    * the self-join runs only within key groups. Candidate pairs are
-   * distinct'd ids-only BEFORE the two hash re-attach joins, mirroring
-   * the text-LSH shuffle-width discipline.
+   * distinct'd ids-only BEFORE the two hash re-attach joins, so the
+   * exchanges carry (long, long) rows.
    * Output: (id_a < id_b, hamming).
    */
   def phashNearDupPairs(hashes: DataFrame, bands: Int = 4,

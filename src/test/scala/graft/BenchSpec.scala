@@ -204,6 +204,33 @@ class BenchSpec extends AnyFunSuite with Matchers {
     }
   }
 
+  test("a 4-core run reads, gates against and lands over its own history file") {
+    Bench.defaultHistory("32") shouldBe "docs/bench/latest.json"
+    Bench.defaultHistory("4") shouldBe "docs/bench/latest_c4.json"
+    // the old default: a 4-core run read the 32-core record — a cpus
+    // mismatch, so it was neither gated nor landed
+    Bench.readHistory(Bench.defaultHistory("32"), "testdata/sf0.1", "4")._1 shouldBe true
+    // the committed 4-core record gates a 4-core run
+    val (mismatch, hist) = Bench.readHistory(Bench.defaultHistory("4"), "testdata/sf0.1", "4")
+    mismatch shouldBe false
+    hist.size should be >= 250
+    // a diffuse 3x drag is vetoed against it; a run that reads like it lands
+    Bench.landingVeto(hist.map { case (k, v) => k -> v * 3 }, hist) should not be empty
+    Bench.landingVeto(hist, hist) shouldBe None
+    val dir = java.nio.file.Files.createTempDirectory("bench-hist-c4")
+    val own = dir.resolve("latest_c4.json")
+    try {
+      java.nio.file.Files.copy(java.nio.file.Paths.get(Bench.defaultHistory("4")), own)
+      val record = """{"sf":"testdata/sf0.1","jvm":{"cpus":"4"},"queries":{"q3_distinct":0.19}}"""
+      Bench.landHistory(own.toString, record, veto = None) shouldBe true
+      Bench.readHistory(own.toString, "testdata/sf0.1", "4") shouldBe
+        ((false, Map("q3_distinct" -> 0.19)))
+    } finally {
+      java.nio.file.Files.deleteIfExists(own)
+      java.nio.file.Files.deleteIfExists(dir)
+    }
+  }
+
   test("marker reference levels derive from the history, literals only as fallback") {
     // with a committed history, every panel member's reference IS that
     // history's value — the hard-coded literal is dead weight there, so

@@ -1082,26 +1082,24 @@ class MlSpec extends SparkSpec {
         phase(gate.ingest(b.toDF("doc_id", "text"), "text", "doc_id"))._2
       }
       // no batch scans the index; per ingest: batch-signature cut, ONE
-      // broadcast-size probe shared by the index and retained legs, edge
-      // cut (batch 1 has no retained leg yet, hence fewer jobs)
+      // broadcast-size probe shared by all three legs, edge cut. Every
+      // leg broadcasts the batch, so the retained leg adds no job
       per.foreach { case (_, sql, sc) => sc shouldBe 0; sql shouldBe 3 }
-      per.map(_._1) shouldBe Seq(11, 14, 14)
+      per.map(_._1) shouldBe Seq(6, 6, 6)
       // and the result is the linked cluster (index doc 1 + 100..102, 104)
       val w = gate.weights(Seq(1L, 100L, 102L, 103L, 104L).toDF("doc_id"), "doc_id")
         .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
       Seq(1L, 100L, 102L, 104L).foreach(id => w(id) should be > 1L)
       // the library fold over the same batches builds its edge set with
       // the gate's builder, but nothing cuts its index in advance: the
-      // edge cut's plan scans the index source twice (band join and
-      // signature re-attach) on every call. Per call: 6 SQL executions
-      // and 26 or 27 jobs — one extra job appears in some calls and not
-      // in others, in no fixed position.
+      // edge cut's plan scans the index source once, in the index leg's
+      // band join, on every call
       val upd = batches.map { b =>
         phase(Dedup.resolveUpdate(labels, idxSigs, Dedup.minHashSignatures(
           b.toDF("doc_id", "text"), "text", "doc_id")))._2
       }
       upd.foreach { case (jobs, sql, sc) =>
-        sc shouldBe 2; sql shouldBe 6; jobs should (be >= 26 and be <= 27)
+        sc shouldBe 1; sql shouldBe 6; jobs shouldBe 21
       }
     } finally {
       spark.sparkContext.removeJobTag(tag)
@@ -1577,6 +1575,100 @@ class MlSpec extends SparkSpec {
     m.map(_._1).toSet shouldBe Set(100L)          // only the dup matches...
     m.map(_._2).toSet should contain allOf (1L, 4L) // ...against its index bases
     all(m.map(_._2)) should be < 100L             // never index x index or new x new
+  }
+
+  test("LSH pair kernels equal a brute-force reference: every pair once, md5 band buckets, matching-hash fraction") {
+    implicit val s = spark
+    import s.implicits._
+    // hand-made 8-hash signatures, 4 bands of 2
+    val idxRows = Seq(
+      10L -> Seq(1L, 2L, 3L, 4L, 5L, 6L, 7L, 8L),
+      11L -> Seq(1L, 2L, 3L, 4L, 9L, 9L, 9L, 9L),         // bands 0,1 with 10
+      12L -> Seq(1L, 2L, 3L, 4L, 5L, 6L, 7L, 8L),         // all 4 bands with 10
+      13L -> Seq(0L, 2L, 3L, 0L, 5L, 0L, 7L, 0L),         // 4/8 with 10, no band
+      20L -> Seq(1L, 2L, 50L, 51L, 52L, 53L, 54L, 55L),   // duplicate id,
+      20L -> Seq(60L, 61L, 3L, 4L, 62L, 63L, 64L, 65L),   // both copies match
+      21L -> Seq(1L, 2L, 3L, 4L, 5L, 6L, 96L, 97L),       // duplicate id,
+      21L -> Seq(90L, 91L, 92L, 93L, 94L, 95L, 96L, 97L)) // one copy matches
+    val newRows = Seq(
+      1L -> Seq(1L, 2L, 3L, 4L, 5L, 6L, 7L, 8L),
+      2L -> Seq(70L, 71L, 72L, 73L, 74L, 75L, 7L, 8L),    // band 3 only
+      3L -> Seq(100L, 101L, 102L, 103L, 104L, 105L, 106L, 107L))
+    def frame(rows: Seq[(Long, Seq[Long])]) =
+      rows.toDF("id", "h")
+        .select(col("id") +: (0 until 8).map(j => col("h")(j).as(s"mh$j")): _*)
+    val md = java.security.MessageDigest.getInstance("MD5")
+    def buckets(h: Seq[Long]) = h.grouped(2).map(b =>
+      md.digest(b.mkString(",").getBytes("UTF-8")).map("%02x".format(_)).mkString).toSeq
+    def est(a: Seq[Long], b: Seq[Long]) = a.zip(b).count { case (x, y) => x == y } / 8.0
+    def reference(as: Seq[(Long, Seq[Long])], bs: Seq[(Long, Seq[Long])],
+                  keep: (Long, Long) => Boolean, minEst: Double) =
+      (for { (ia, ha) <- as; (ib, hb) <- bs
+             if keep(ia, ib) && buckets(ha).zip(buckets(hb)).exists { case (x, y) => x == y }
+             if est(ha, hb) >= minEst } yield (ia, ib, est(ha, hb))).sorted
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq.sorted
+    val empty = Seq.empty[(Long, Seq[Long])]
+    for (minEst <- Seq(0.0, 0.5, 0.75)) {
+      withClue(s"minEstJaccard=$minEst: ") {
+        for ((as, bs) <- Seq((newRows, idxRows), (empty, idxRows), (newRows, empty)))
+          rows(Dedup.lshMatches(frame(as), frame(bs), minEstJaccard = minEst)) shouldBe
+            reference(as, bs, (_, _) => true, minEst)
+        for (rs <- Seq(idxRows, newRows ++ idxRows, empty))
+          rows(Dedup.lshCandidatePairs(frame(rs), minEstJaccard = minEst)) shouldBe
+            reference(rs, rs, _ < _, minEst)
+      }
+    }
+    // a pair sharing 2 or 4 bands comes out once; 4/8 matching hashes in
+    // no common band is no candidate, even at minEstJaccard 0
+    val self = rows(Dedup.lshCandidatePairs(frame(idxRows), minEstJaccard = 0.0))
+    self.filter(p => (p._1, p._2) == ((10L, 11L))) shouldBe Seq((10L, 11L, 0.5))
+    self.filter(p => (p._1, p._2) == ((10L, 12L))) shouldBe Seq((10L, 12L, 1.0))
+    self.filter(p => (p._1, p._2) == ((10L, 13L))) shouldBe empty
+    val m = rows(Dedup.lshMatches(frame(newRows), frame(idxRows), minEstJaccard = 0.0))
+    m.filter(_._2 == 20L) should have size 2
+    m.filter(p => (p._1, p._2) == ((1L, 21L))) shouldBe Seq((1L, 21L, 0.75))
+  }
+
+  test("gate index leg against a broadcast-small batch: no shuffle exchange, no pair aggregate") {
+    implicit val s = spark
+    import s.implicits._
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val rnd = new scala.util.Random(29)
+    val words = Vector("alpha", "bravo", "carol", "delta", "echo",
+      "fox", "golf", "hotel", "india", "jazz")
+    def txt(n: Int) = Seq.fill(n)(words(rnd.nextInt(words.size))).mkString(" ")
+    val base = txt(60)
+    val idxSigs = Dedup.minHashSignatures(
+      Seq((1L, base + " index copy"), (2L, txt(50)), (3L, txt(50))).toDF("doc_id", "text"),
+      "text", "doc_id").localCheckpoint(true)
+    val gate = new graft.ml.SoftDedupGate(Seq.empty[(Long, Long)].toDF("id", "keep_id"), idxSigs)
+    // the batch signatures as the gate holds them: an eager cut
+    val batchSigs = Dedup.minHashSignatures(
+      Seq((100L, base), (101L, txt(40))).toDF("doc_id", "text"), "text", "doc_id")
+      .localCheckpoint(true)
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case other => other.children.flatMap(nodes)
+    })
+    def leg(df: org.apache.spark.sql.DataFrame) = {
+      val out = df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      val plan = nodes(df.queryExecution.executedPlan)
+      plan.collect { case e: ShuffleExchangeExec => e } shouldBe empty
+      // both inputs are cuts, so any aggregate here would be a pair distinct
+      plan.collect { case a: BaseAggregateExec => a } shouldBe empty
+      out
+    }
+    // the gate's index leg (what batchEdges joins per micro-batch) and
+    // the public kernel over the same cut signatures agree
+    val viaGate = leg(Dedup.bandPairs(Dedup.bandSignatures(batchSigs, 8, 4),
+      gate.indexBands, 8, 4, 0.5, ordered = false, pinA = true))
+    viaGate shouldBe leg(Dedup.lshMatches(batchSigs, idxSigs))
+    viaGate shouldBe Set((100L, 1L))
   }
 
   test("decontaminate actor: bloom flags match the exact join, via a persisted state") {

@@ -575,7 +575,7 @@ class PlanSpec extends SparkSpec {
     import spark.implicits._
     // production shape: the index signature frame is prebuilt and read
     // back from parquet; an ingest batch must stream the index through
-    // the band join AND the sig re-attach without repartitioning it
+    // the band join without repartitioning it
     val dir = tmpDir("lshidx")
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     graft.ml.Dedup.minHashSignatures(docs, "text", "doc_id")
