@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   /** Env overrides are parsed defensively: a malformed value must not
    *  crash the run AFTER the expensive setup — warn and fall back to
@@ -198,24 +197,15 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    System.setProperty("derby.system.home", "target/derby") // keep derby.log out of CWD
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir", "target/spark-warehouse")
-      .config("spark.ui.enabled", "false")
+    val cpus = Sessions.cpus
     // extra confs for A/B experiments, e.g.
     // SPARK_GRAFT_EXTRA_CONF="spark.sql.streaming.stateStore.providerClass=...RocksDBStateStoreProvider"
     // Entries are ';'-separated; a literal ';' inside a value is escaped
     // as '\;' (rare, but JDBC URLs have them).
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach(
+    val extraConf = sys.env.get("SPARK_GRAFT_EXTRA_CONF").toSeq.flatMap(
       _.split("(?<!\\\\);").map(_.replace("\\;", ";")).filter(_.contains("="))
-        .foreach { kv => val Array(k, v) = kv.split("=", 2); builder.config(k, v) })
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+        .map { kv => val Array(k, v) = kv.split("=", 2); k -> v })
+    val spark = Sessions.local(cpus, extra = extraConf)
     // Untimed steady-state warmup: run each query once at sf0.001 (~1% of
     // the bench scale) IMMEDIATELY before timing it. A query's generated
     // whole-stage-codegen source depends on the plan/schema, not the data
@@ -347,17 +337,6 @@ object Bench {
     // history that every sf0.1 gate reads; the empty-prior landingVeto
     // would wave it through).
     val (historySfMismatch, history) = readHistory(histFile, sfDir, cpus)
-    // Blocking storage-drain barrier: the per-query cleanup below is
-    // NON-blocking (eviction overlaps the next warmup), so a heavy query
-    // could otherwise start its TIMED window while the block manager is
-    // still evicting a predecessor's blocks — the r13 failure mode, where
-    // ~10 queries recorded 3-16x their reproducible cost from eviction/GC
-    // stalls landing inside their timed window. unpersist(blocking=true)
-    // on whatever is still registered is a no-op when the async eviction
-    // already finished (the common case), so the barrier costs ~0 when
-    // the host is quiet and exactly the outstanding eviction when not.
-    def drainStorage(blocking: Boolean): Unit =
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking))
     case class QRes(name: String, firstS: Double, warmed: Boolean, warmS: Double)
     val results = selected.map { case (name, fn) =>
       // warmed means the warm run COMPLETED: a warm attempt that throws
@@ -381,8 +360,10 @@ object Bench {
       // synchronous drain barrier: the warm run may have persisted /
       // checkpointed, and the PREVIOUS query's non-blocking cleanup may
       // still be evicting — the timed window must start with zero storage
-      // blocks and no in-flight eviction (a no-op when already clean)
-      drainStorage(blocking = true)
+      // blocks and no in-flight eviction (a no-op when already clean).
+      // Without it, r13 booked ~10 queries at 3-16x their reproducible
+      // cost from eviction/GC stalls landing inside the timed window.
+      Sessions.dropStorage(spark, blocking = true)
       val t0 = System.nanoTime()
       try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
       val dt = (System.nanoTime() - t0) / 1e9
@@ -392,7 +373,7 @@ object Bench {
       // on eviction/GC. Non-blocking here: eviction proceeds while the
       // next query warms up; the blocking barrier above is what keeps it
       // out of the next TIMED window.
-      drainStorage(blocking = false)
+      Sessions.dropStorage(spark, blocking = false)
       QRes(name, dt, warmed, warmS)
     }
     // Outlier RE-TIME pass v2: a recorded number far above what this
@@ -431,13 +412,13 @@ object Bench {
     val hostDegraded = suspects.count(r => flaggedBy(r).contains("history")) > 10
     val (retried, shedSuspects) = suspects.splitAt(40)
     def timeOnce(name: String): Double = {
-      drainStorage(blocking = true)
+      Sessions.dropStorage(spark, blocking = true)
       System.gc()
       val fn = SparkEntry.queries(name)
       val t0 = System.nanoTime()
       val ok = try { fn(spark, sfDir).count(); true } catch { case _: Throwable => false }
       val dt = (System.nanoTime() - t0) / 1e9
-      drainStorage(blocking = false)
+      Sessions.dropStorage(spark, blocking = false)
       if (ok) dt else -1.0
     }
     val retryS: Map[String, Double] = retried.map(r => r.name -> timeOnce(r.name)).toMap

@@ -58,7 +58,6 @@ object Queries {
     }
 
   private def eventsView(spark: SparkSession, dir: String): Unit = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     normalizeEventTs(spark.read.parquet(s"$dir/events.parquet"))
       .createOrReplaceTempView("events")
   }
@@ -70,7 +69,6 @@ object Queries {
   private val streamSchemaCache =
     scala.collection.concurrent.TrieMap.empty[String, org.apache.spark.sql.types.StructType]
   private def streamTable(spark: SparkSession, dir: String, file: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val schema = streamSchemaCache.getOrElseUpdate(s"$dir/$file",
       spark.read.parquet(s"$dir/$file").schema)
     spark.readStream.schema(schema).option("pathGlobFilter", file).parquet(dir)
@@ -7550,40 +7548,33 @@ object Queries {
 
     // STATELESSLY per row (Dedup.minHashSignaturesInline — no shingle
     // explode, no groupBy state), banded in place with the row, and
-    // matched against the static corpus index by a per-micro-batch keyed
-    // (band,bucket) join, so the single streaming aggregation the engine
-    // allows is spent on the per-doc best-match max. Duplicate candidate
-    // pairs across bands are harmless under max(), which is what lets the
-    // pair-distinct step drop out of the streaming plan entirely.
+    // matched against the static corpus index by the LSH pair kernel's
+    // per-micro-batch (band, key) join, so the single streaming
+    // aggregation the engine allows is spent on the per-doc best-match
+    // max. The kernel emits each pair once, from its first matching band,
+    // and scores it from the signatures both banded rows carry, so the
+    // streaming plan has no pair distinct and no signature re-attach.
     // Unmatched batch docs are re-attached after the drain (q85's
     // grade-after-drain shape). Stream/batch parity: d16's oracle holds
     // VERBATIM on the full drain.
     Spec("q90_stream_incremental_dedup", (spark, dir) => {
       val index = spark.read.parquet(s"$dir/documents.parquet")
         .select(col("doc_id"), col("text"))
-      val idxSigs = Dedup.minHashSignatures(index, "text", "doc_id")
-      val idxBanded = Dedup.bandedFrame(idxSigs, 8, 4)
-        .withColumnRenamed("id", "index_id")
-      val ixSigs = idxSigs.select(col("id").as("index_id") +:
-        (0 until 8).map(j => col(s"mh$j").as(s"ix$j")): _*)
+      val idxBands = Dedup.bandSignatures(
+        Dedup.minHashSignatures(index, "text", "doc_id"), 8, 4)
       val b0 = streamTable(spark, dir, "documents.parquet")
         .select(col("doc_id"), col("text")).filter(col("doc_id") % 10 === 0)
       val batch = b0.select((col("doc_id") + 200000L).as("doc_id"),
           concat(col("text"), lit(" dup dup dup")).as("text"))
         .unionAll(b0.select((col("doc_id") + 300000L).as("doc_id"),
           reverse(col("text")).as("text")))
-      val sigsS = Dedup.minHashSignaturesInline(batch, "text", "doc_id")
-      val sBanded = sigsS
-        .select(col("id").as("new_id") +: explode(Dedup.bandStructs(8, 4)).as("bb") +:
-          (0 until 8).map(j => col(s"mh$j")): _*)
-        .select(col("new_id") +: col("bb.band").as("band") +:
-          col("bb.bucket").as("bucket") +: (0 until 8).map(j => col(s"mh$j")): _*)
-      val m = (0 until 8).map(j =>
-        when(col(s"mh$j") === col(s"ix$j"), 1L).otherwise(0L)).reduce(_ + _)
-      val bestStream = sBanded.join(idxBanded, Seq("band", "bucket"))
-        .join(ixSigs, Seq("index_id"))
-        .withColumn("m", m).filter(col("m") >= 4)
-        .groupBy(col("new_id")).agg(max(col("m")).as("best_matches"))
+      val sBands = Dedup.bandSignatures(
+        Dedup.minHashSignaturesInline(batch, "text", "doc_id"), 8, 4)
+      // best_matches = matching hashes out of 8 (est_jaccard >= 0.5 is m >= 4)
+      val bestStream = Dedup.bandPairs(sBands, idxBands, 8, 4, 0.5,
+          ordered = false, pinA = false)
+        .groupBy(col("id_a").as("new_id"))
+        .agg(max((col("est_jaccard") * 8).cast("long")).as("best_matches"))
       val best = drainToMemory(spark, bestStream, "q90_inc", "complete")
       val db = spark.read.parquet(s"$dir/documents.parquet")
         .filter(col("doc_id") % 10 === 0)
@@ -7604,7 +7595,7 @@ object Queries {
     // document gets its sampling weight assigned ON INGEST via
     // stream-static joins against the prebuilt index — an exact-match
     // fast path (stateless content fingerprint vs the index fp frame)
-    // plus the LSH near-dup leg (q90's banded shape) — then ONE complete-
+    // plus the LSH near-dup leg (q90's pair kernel) — then ONE complete-
     // mode aggregation picks the best match (max signature agreement,
     // tie to the smallest index id). Post-drain, the match resolves
     // through the ARTIFACT's labels: weight = 1e6 div (cluster+1) for a
@@ -7617,11 +7608,7 @@ object Queries {
       val index = docCorpus(spark, dir)
       // persisted index signatures (index-build artifact) — the static
       // sides of the stream never re-shingle the corpus
-      val idxSigs = corpusSignatures(spark, dir)
-      val idxBanded = Dedup.bandedFrame(idxSigs, 8, 4)
-        .withColumnRenamed("id", "index_id")
-      val ixSigs = idxSigs.select(col("id").as("index_id") +:
-        (0 until 8).map(j => col(s"mh$j").as(s"ix$j")): _*)
+      val idxBands = Dedup.bandSignatures(corpusSignatures(spark, dir), 8, 4)
       val idxFp = index.select(col("doc_id").as("index_id"),
         md5(Dedup.normText(col("text"))).as("fp"))
       val b0 = streamTable(spark, dir, "documents.parquet")
@@ -7635,18 +7622,12 @@ object Queries {
         .select(col("doc_id").as("new_id"), md5(Dedup.normText(col("text"))).as("fp"))
         .join(idxFp, Seq("fp"))
         .select(col("new_id"), col("index_id"), lit(8L).as("m"))
-      val sigsS = Dedup.minHashSignaturesInline(batch, "text", "doc_id")
-      val sBanded = sigsS
-        .select(col("id").as("new_id") +: explode(Dedup.bandStructs(8, 4)).as("bb") +:
-          (0 until 8).map(j => col(s"mh$j")): _*)
-        .select(col("new_id") +: col("bb.band").as("band") +:
-          col("bb.bucket").as("bucket") +: (0 until 8).map(j => col(s"mh$j")): _*)
-      val m = (0 until 8).map(j =>
-        when(col(s"mh$j") === col(s"ix$j"), 1L).otherwise(0L)).reduce(_ + _)
-      val lsh = sBanded.join(idxBanded, Seq("band", "bucket"))
-        .join(ixSigs, Seq("index_id"))
-        .withColumn("m", m).filter(col("m") >= 4)
-        .select(col("new_id"), col("index_id"), col("m"))
+      val sBands = Dedup.bandSignatures(
+        Dedup.minHashSignaturesInline(batch, "text", "doc_id"), 8, 4)
+      // m = matching hashes out of 8 (est_jaccard >= 0.5 is m >= 4)
+      val lsh = Dedup.bandPairs(sBands, idxBands, 8, 4, 0.5, ordered = false, pinA = false)
+        .select(col("id_a").as("new_id"), col("id_b").as("index_id"),
+          (col("est_jaccard") * 8).cast("long").as("m"))
       val bestStream = exact.unionAll(lsh)
         .groupBy(col("new_id"))
         .agg(min(struct((-col("m")).as("nm"), col("index_id").as("iid"))).as("b"))

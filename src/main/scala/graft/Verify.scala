@@ -1,6 +1,7 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import com.fasterxml.jackson.databind.ObjectMapper
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -9,17 +10,7 @@ object Verify {
     // optional 3rd+ args: restrict to the named queries (local iteration;
     // the driver always calls with exactly two)
     val only: Set[String] = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    System.setProperty("derby.system.home", "target/derby") // keep derby.log out of CWD
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir", "target/spark-warehouse")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
@@ -29,26 +20,11 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // drop storage blocks the query left behind (persist/localCheckpoint
-      // in the iterative/multi-consumer ops) — Bench's discipline: 250+
-      // queries in one session otherwise accumulate blocks until eviction
-      // stalls land in later queries' writes
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+      Sessions.dropStorage(spark, blocking = false)
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    // a tab or CR in builder-authored SQL must not make the driver's
+    // json.load fail (that would silently zero the round's correctness)
+    val json = new ObjectMapper().writeValueAsString(SparkEntry.oracleSql.asJava)
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

@@ -93,17 +93,10 @@ final class PipelineRunner(pipelineCtx: PipelineContext = PipelineContext()) {
     pipelineCtx.metricsUri.foreach { uri =>
       val dir = java.nio.file.Paths.get(uri)
       java.nio.file.Files.createDirectories(dir)
-      // full JSON string escape incl. control chars (a tab in a schema DDL
-      // or action name must not produce an unparseable metrics file)
-      def q(s: String) = "\"" + s.flatMap {
-        case '"' => "\\\""
-        case '\\' => "\\\\"
-        case '\n' => "\\n"
-        case '\r' => "\\r"
-        case '\t' => "\\t"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"
-        case c => c.toString
-      } + "\""
+      // Jackson escapes every control char: a tab in a schema DDL or an
+      // action name must not produce an unparseable metrics file
+      val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+      def q(s: String) = mapper.writeValueAsString(s)
       val rows = _metrics.map { m =>
         s"""{"job": ${q(m.job)}, "action": ${q(m.action)}, "rowCount": ${m.rowCount.getOrElse(-1L)},
            | "schema": ${q(m.schema)}, "estimatedSizeBytes": ${m.estimatedSizeBytes.getOrElse(BigInt(-1))},

@@ -146,25 +146,6 @@ object Dedup {
       element_at(col("mh"), j + 1).as(s"mh$j")): _*)
   }
 
-  /** The (band, bucket) struct array for one signature row — explode-ready;
-   *  shared by [[bandedFrame]] and callers that must band while KEEPING
-   *  other columns (e.g. a streaming row carrying its own signature). */
-  private[graft] def bandStructs(numHashes: Int, bands: Int): Column = {
-    val rowsPerBand = numHashes / bands
-    array((0 until bands).map { b =>
-      val slice = (b * rowsPerBand until (b + 1) * rowsPerBand).map(j => col(s"mh$j").cast("string"))
-      struct(lit(b).as("band"), md5(concat_ws(",", slice: _*)).as("bucket"))
-    }: _*)
-  }
-
-  /** (id, band, bucket) expansion of a signature frame, md5 bucket per
-   *  band — the banding the stream-static queries (q90, q114) join on.
-   *  The pair kernels band with [[bandSignatures]] instead. */
-  private[graft] def bandedFrame(signatures: DataFrame, numHashes: Int, bands: Int): DataFrame =
-    signatures
-      .select(col("id"), explode(bandStructs(numHashes, bands)).as("bb"))
-      .select(col("id"), col("bb.band").as("band"), col("bb.bucket").as("bucket"))
-
   /** The banded form the LSH pair kernel joins: one row per (document,
    *  band) — `id`, `band`, `key` (xxhash64 of the band's MinHash values)
    *  and the document's FULL signature `mh0..mh{k-1}` — all longs but

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Scale probe for the sketch verdict-flag queries: runs every k-family
  *  catalog query at sf0.1 and the synthesized sf1 (if present) and
@@ -9,11 +8,7 @@ import org.apache.spark.sql.SparkSession
  *  `sbt "Test/runMain graft.CheckK [query,names]"` */
 object CheckK {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local()
     val names = args.headOption.map(_.split(",").toSeq).getOrElse(
       Queries.all.map(_.name).sorted.filter(n =>
         n.startsWith("k") || n.startsWith("b") ||

@@ -1,13 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump `.explain("formatted")` for every declared catalog query to a
  *  directory (default plans/r16), one `<name>_<suffix>.txt` per query —
- *  the optimization round's plan-evidence deliverable. Mirrors Bench's
- *  session config so the captured plans are the benched plans (AQE
- *  initial plan; the bench's executed plan differs only by the
- *  AQE-final exchange coalescing).
+ *  the optimization round's plan-evidence deliverable. Builds Bench's
+ *  session ([[Sessions.local]]) so the captured plans are the benched
+ *  plans (AQE initial plan; the bench's executed plan differs only by
+ *  the AQE-final exchange coalescing). The committed `plans/r16` dumps
+ *  were taken at 32 cores: a re-dump compared against them needs
+ *  `SPARK_GRAFT_CPUS=32`, or every exchange's partition count differs.
  *
  *  Streaming gate queries execute their drain and return the drained
  *  memory-sink result, so their dump shows the post-drain batch plan;
@@ -22,13 +22,7 @@ object DumpPlans {
     val outDir = args.drop(1).headOption.getOrElse("plans/r16")
     val suffix = args.drop(2).headOption.getOrElse("before")
     val only = args.drop(3).headOption.map(_.split(",").map(_.trim).toSet)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir", "target/spark-warehouse")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local()
     new java.io.File(outDir).mkdirs()
     try Queries.prepareFixtures(spark, sfDir) catch { case _: Throwable => () }
     val selected = SparkEntry.queries.toSeq.sortBy(_._1)
@@ -61,7 +55,7 @@ object DumpPlans {
       } catch { case e: Throwable =>
         println(s"[plans] $name FAILED: ${e.getClass.getSimpleName}: ${e.getMessage}")
       }
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+      Sessions.dropStorage(spark, blocking = false)
     }
     spark.stop()
   }

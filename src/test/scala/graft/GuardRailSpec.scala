@@ -175,18 +175,19 @@ class GuardRailSpec extends SparkSpec {
   }
 
   /** `file:line: text` for every non-comment line of a `.scala` file
-   *  under `src/main/scala/<dir>` (recursively) that `offends`.
-   *  Anchored on the sbt build root, walking up from the CWD, so a
-   *  non-root working directory FAILS LOUDLY via the require below
-   *  instead of silently scanning nothing. */
-  private def mainSourceOffenders(dir: String)(
+   *  under `<srcRoot>/<dir>` (recursively) that `offends`; `offends`
+   *  gets the file's path relative to that dir. Anchored on the sbt
+   *  build root, walking up from the CWD, so a non-root working directory
+   *  FAILS LOUDLY via the require below instead of silently scanning
+   *  nothing. */
+  private def sourceOffenders(srcRoot: String, dir: String)(
       offends: (String, String) => Boolean): Seq[String] = {
     val root = Iterator.iterate(
         java.nio.file.Paths.get("").toAbsolutePath)(_.getParent)
       .takeWhile(_ != null).take(6)
       .find(p => java.nio.file.Files.exists(p.resolve("build.sbt")))
       .getOrElse(java.nio.file.Paths.get(""))
-    val base = root.resolve("src/main/scala").resolve(dir)
+    val base = root.resolve(srcRoot).resolve(dir)
     require(java.nio.file.Files.isDirectory(base),
       s"source scan found no dir at $base — run tests from the repo " +
         "(or fix the anchor), don't let the guard scan nothing")
@@ -199,7 +200,7 @@ class GuardRailSpec extends SparkSpec {
       new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
         .linesIterator.zipWithIndex.collect {
           case (l, i) if !l.trim.startsWith("//") && !l.trim.startsWith("*") &&
-            offends(name, l) => s"$name:${i + 1}: ${l.trim}"
+            offends(name, l) => s"${root.relativize(p)}:${i + 1}: ${l.trim}"
         }.toSeq
     }
   }
@@ -210,7 +211,7 @@ class GuardRailSpec extends SparkSpec {
     // the fix — but only if every ml persist goes through it: a raw
     // .persist() added later silently re-opens the leak for the actor
     // surface and any leased library caller. Fail at add time instead.
-    val offenders = mainSourceOffenders("graft/ml") { (file, l) =>
+    val offenders = sourceOffenders("src/main/scala", "graft/ml") { (file, l) =>
       file != "CacheLease.scala" &&
         l.contains(".persist(") && !l.contains("CacheLease.persist")
     }
@@ -226,12 +227,32 @@ class GuardRailSpec extends SparkSpec {
     // shows in the metrics record. Tuning decisions are constants or
     // per-session confs; deployment settings (paths, CPU count, keys)
     // come from sys.env, which stays allowed.
-    val offenders = mainSourceOffenders("graft") { (_, l) =>
+    val offenders = sourceOffenders("src/main/scala", "graft") { (_, l) =>
       l.contains("sys.props") || l.contains("System.getProperty")
     }
     withClue("JVM-global property reads under src/main/scala/graft: ") {
       offenders shouldBe empty
     }
+  }
+
+  test("every local session is built by graft.Sessions, with its defaults") {
+    // Hand-copied session confs drift apart (core counts, an unpinned
+    // timezone where normalizeEventTs needs UTC), so every local session
+    // takes its defaults from one place. Launcher alone builds its own:
+    // its master and confs come from spark-submit and the app config.
+    val builderCall = "SparkSession" + ".builder"
+    val offenders = Seq("src/main/scala", "src/test/scala").flatMap(srcRoot =>
+      sourceOffenders(srcRoot, "") { (file, l) =>
+        l.contains(builderCall) && !(srcRoot == "src/main/scala" &&
+          Set("graft/Sessions.scala", "graft/Launcher.scala")(file))
+      })
+    withClue("sessions built by hand (use graft.Sessions.local): ") {
+      offenders shouldBe empty
+    }
+    spark.conf.get("spark.sql.session.timeZone") shouldBe "UTC"
+    spark.conf.get("spark.sql.shuffle.partitions") shouldBe "4"
+    spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") shouldBe "true"
+    spark.sparkContext.uiWebUrl shouldBe None
   }
 
   test("every catalog query carries an oracle (no rows-only weak checks)") {

@@ -161,13 +161,21 @@ class PipelineRunnerSpec extends SparkSpec {
     val dir = tmpDir("metrics")
     val runner = new PipelineRunner(PipelineContext(singleSparkSession = true,
       metricsEnabled = true, metricsUri = Some(dir)))
-    runner.run(Pipeline("mtest", Seq(Job("j", Seq(readerAction("li_mx")))),
+    // an action name holding a tab, a quote and a backslash must still
+    // give a parseable file that round-trips the name
+    val oddName = "odd\t\"name\\x"
+    runner.run(Pipeline("mtest", Seq(Job("j", Seq(readerAction("li_mx"),
+      Action(oddName, new SqlTransformer().sqlString("select 1 as one"),
+        Some(View("mx_odd")))))),
       singleSparkSession = true))(spark)
     val files = new java.io.File(dir).listFiles()
     files.length shouldBe 1
     val json = new String(java.nio.file.Files.readAllBytes(files.head.toPath), "UTF-8")
     json should include("\"rowCount\": 6000")
     json should include("\"status\": \"completed\"")
+    val tree = new com.fasterxml.jackson.databind.ObjectMapper().readTree(json)
+    tree.size shouldBe 2
+    tree.get(1).get("action").asText shouldBe oddName
   }
 
   test("SQL actors self-report referenced views for auto-caching") {

@@ -6,11 +6,7 @@ import org.apache.spark.sql.functions._
 object ProfilePhash {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/tmp/graft_scale/sf1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    implicit val s: SparkSession = spark
-    spark.sparkContext.setLogLevel("ERROR")
+    implicit val spark: SparkSession = Sessions.local()
     val docs = spark.read.parquet(s"$dir/documents.parquet").select(col("doc_id"), col("text"))
     val icorpus = docs
       .unionAll(docs.filter(col("doc_id") % 5 === 0)

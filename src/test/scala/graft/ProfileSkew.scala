@@ -11,13 +11,9 @@ object ProfileSkew {
   def main(args: Array[String]): Unit = {
     val hotRows = args.headOption.map(_.toLong).getOrElse(4000000L)
     val salt = args.lift(1).map(_.toInt).getOrElse(16)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local(extra = Seq(
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1"))
 
     // hot key 0 carries `hotRows`; 100 cold keys share the same amount
     def left(s: SparkSession): DataFrame = s.range(0, 2 * hotRows).selectExpr(

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Degree-skew probe for the two triangle-count shapes (g2 naive
   * id-ordered edge-iterator vs g2b degree-ordered orientation) on a
   * planted celebrity graph: one hub of degree `hub` with a MID-RANGE id
@@ -16,13 +14,7 @@ object ProfileTriangles {
   def main(args: Array[String]): Unit = {
     val hub = args.headOption.map(_.toLong).getOrElse(20000L)
     val n = args.lift(1).map(_.toLong).getOrElse(200000L)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", "target/spark-warehouse")
-      .config("derby.system.home", "target/derby")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local()
 
     // hub sits at id n/2: half its star edges arrive (a < hub), half leave
     // (hub < b), so the id-ordered wedge join centers (hub/2)^2 pairs on

@@ -25,21 +25,7 @@ abstract class SparkSpec extends AnyFunSuite with Matchers with BeforeAndAfterAl
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    // keep Derby's log and the SQL warehouse out of the repo root —
-    // both default to CWD otherwise (derby.log, spark-warehouse/)
-    System.setProperty("derby.system.home", "target/derby")
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get("target/derby"))
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir", "target/spark-warehouse")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  // four cores whatever SPARK_GRAFT_CPUS says: MlSpec pins job counts at
+  // four shuffle partitions
+  lazy val session: SparkSession = Sessions.local("4")
 }

@@ -206,7 +206,6 @@ class StreamingSpec extends SparkSpec {
 
   test("transformWithState sessionizer matches the flatMapGroupsWithState one") {
     implicit val s = spark
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val dir = sfDir
     val schema = spark.read.parquet(s"$dir/events.parquet").schema
     def sessions(processorCls: String): Set[(Long, Long, Long)] = {
