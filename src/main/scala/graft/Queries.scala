@@ -7572,7 +7572,7 @@ object Queries {
         Dedup.minHashSignaturesInline(batch, "text", "doc_id"), 8, 4)
       // best_matches = matching hashes out of 8 (est_jaccard >= 0.5 is m >= 4)
       val bestStream = Dedup.bandPairs(sBands, idxBands, 8, 4, 0.5,
-          ordered = false, pinA = false)
+          ordered = lit(false), pinA = false)
         .groupBy(col("id_a").as("new_id"))
         .agg(max((col("est_jaccard") * 8).cast("long")).as("best_matches"))
       val best = drainToMemory(spark, bestStream, "q90_inc", "complete")
@@ -7625,7 +7625,7 @@ object Queries {
       val sBands = Dedup.bandSignatures(
         Dedup.minHashSignaturesInline(batch, "text", "doc_id"), 8, 4)
       // m = matching hashes out of 8 (est_jaccard >= 0.5 is m >= 4)
-      val lsh = Dedup.bandPairs(sBands, idxBands, 8, 4, 0.5, ordered = false, pinA = false)
+      val lsh = Dedup.bandPairs(sBands, idxBands, 8, 4, 0.5, ordered = lit(false), pinA = false)
         .select(col("id_a").as("new_id"), col("id_b").as("index_id"),
           (col("est_jaccard") * 8).cast("long").as("m"))
       val bestStream = exact.unionAll(lsh)
@@ -7720,9 +7720,10 @@ object Queries {
     // q114's one documented blindness: two stream docs duplicating EACH
     // OTHER with no index counterpart both pass q114 at weight 1e6
     // (matches there are vs the index only). The gate runs in
-    // foreachBatch (SoftDedupGate): per micro-batch, one-sided LSH vs
-    // the persisted index signatures + retained-signature cross-batch
-    // leg + lshCandidatePairs batch-internal leg; post-drain the edges
+    // foreachBatch (SoftDedupGate): per micro-batch, ONE LSH join of the
+    // broadcast batch against the persisted index signatures, the
+    // retained signatures of earlier batches and the batch itself
+    // (within-batch pairs once, id_a < id_b); post-drain the edges
     // fold into the persisted resolution via resolveUpdateFromEdges, so
     // the weights are EXACTLY what the next d26 maintenance pass would
     // assign. Fixture = q114's three legs (+600000 exact, +700000
@@ -7737,8 +7738,8 @@ object Queries {
     // q115 under the PER-DOCUMENT CANDIDATE BUDGET (the q115 sf2 watch
     // item's production lever): the same four-leg fixture drained through
     // a gate with maxCandidatesPerDoc = 4 — every micro-batch keeps only
-    // each doc's top-4 est-jaccard candidates over the SYMMETRIZED union
-    // of the three legs (capCandidatesSym, a TopKPairs aggregate), so
+    // each doc's top-4 est-jaccard candidates over the SYMMETRIZED pairs
+    // of its one join (capCandidatesSym, a TopKPairs aggregate), so
     // the per-batch fold cost is bounded however dense the band-bucket
     // space gets at scale. The oracle is UNCHANGED from q115 — the full
     // UNCAPPED union re-resolve — so the green hash IS the proof that

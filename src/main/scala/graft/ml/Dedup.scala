@@ -1,12 +1,13 @@
 package graft.ml
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /**
  * Large-scale document deduplication operators: exact, MinHash+LSH, SimHash,
- * n-gram Jaccard. All are pure DataFrame transformations — no driver-side
- * collects — so they scale by partitioning alone.
+ * n-gram Jaccard. All are pure DataFrame transformations — the one
+ * driver-side collect is the incremental path's bounded batch read
+ * ([[localSignatures]]) — so they scale by partitioning alone.
  *
  * Scale design (100 TB): every stage is a narrow map or a keyed shuffle on a
  * bounded key (doc-id, band-bucket). LSH banding keeps the candidate-pair
@@ -172,11 +173,15 @@ object Dedup {
    * pair `distinct` runs; `est_jaccard` (the matching-hash fraction) is
    * scored from the same row, so no signature re-attach join runs. The
    * band-equality check also makes the rare xxhash64 key collision
-   * harmless: a pair whose band values differ never passes it.
-   * `ordered` keeps `id_a < id_b` (the self-join); otherwise every
-   * non-null `a` × `b` pair. `pinA` broadcasts `a` (a batch the caller
-   * has probed small), so `b` streams through the join with no
-   * exchange. Output: (id_a, id_b, est_jaccard).
+   * harmless: a pair whose band values differ never passes it. The
+   * first-band and `minEstJaccard` filters are part of the join
+   * condition. `ordered` is a boolean over the joined row: where it
+   * holds, only `id_a < id_b` is kept (`lit(true)`: the self-join); where
+   * it does not, every non-null `a` × `b` pair. A per-row `b.<column>`
+   * lets one streamed side mix `a`'s own rows with others
+   * ([[batchEdges]]). `pinA` broadcasts `a` (a batch the caller has
+   * sized small), so `b` streams through the join with no exchange.
+   * Output: (id_a, id_b, est_jaccard).
    *
    * Scale shape, per document at the defaults (8 hashes, 4 bands;
    * UnsafeRow bytes before compression). The previous design joined
@@ -195,7 +200,7 @@ object Dedup {
    */
   private[graft] def bandPairs(a: DataFrame, b: DataFrame, numHashes: Int,
                                bands: Int, minEstJaccard: Double,
-                               ordered: Boolean, pinA: Boolean): DataFrame = {
+                               ordered: Column, pinA: Boolean): DataFrame = {
     val rowsPerBand = numHashes / bands
     def same(j: Int): Column = col(s"a.mh$j") === col(s"b.mh$j")
     val firstBand = (0 until bands).foldRight(lit(-1)) { (bd, later) =>
@@ -204,14 +209,12 @@ object Dedup {
     }
     val est = (0 until numHashes).map(j => when(same(j), 1).otherwise(0))
       .reduce(_ + _).cast("double") / numHashes
-    val ids =
-      if (ordered) col("a.id") < col("b.id")
-      else col("a.id").isNotNull && col("b.id").isNotNull
+    val ids = col("a.id").isNotNull && col("b.id").isNotNull &&
+      (!ordered || col("a.id") < col("b.id"))
     (if (pinA) broadcast(a) else a).as("a")
-      .join(b.as("b"), col("a.band") === col("b.band") && col("a.key") === col("b.key") && ids)
-      .filter(firstBand === col("a.band"))
+      .join(b.as("b"), col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
+        ids && firstBand === col("a.band") && est >= minEstJaccard)
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"), est.as("est_jaccard"))
-      .filter(col("est_jaccard") >= minEstJaccard)
   }
 
   /**
@@ -234,7 +237,7 @@ object Dedup {
   def lshCandidatePairs(signatures: DataFrame, numHashes: Int = 8,
                         bands: Int = 4, minEstJaccard: Double = 0.5): DataFrame = {
     val banded = bandSignatures(signatures, numHashes, bands)
-    bandPairs(banded, banded, numHashes, bands, minEstJaccard, ordered = true, pinA = false)
+    bandPairs(banded, banded, numHashes, bands, minEstJaccard, ordered = lit(true), pinA = false)
   }
 
   /**
@@ -264,7 +267,7 @@ object Dedup {
                  broadcastBatchMaxRows: Long = 1L << 18): DataFrame =
     bandPairs(bandSignatures(newSigs, numHashes, bands),
       bandSignatures(indexSigs, numHashes, bands), numHashes, bands,
-      minEstJaccard, ordered = false, pinA = fitsBroadcast(newSigs, broadcastBatchMaxRows))
+      minEstJaccard, ordered = lit(false), pinA = fitsBroadcast(newSigs, broadcastBatchMaxRows))
       .select(col("id_a").as("new_id"), col("id_b").as("index_id"), col("est_jaccard"))
 
   /**
@@ -619,7 +622,7 @@ object Dedup {
     // Symmetrize with ONE pass over `pairs` (explode of the two
     // orientations) instead of pairs ∪ pairs.swap: the union form
     // references the whole upstream pair DAG twice, and inside the
-    // streaming gate that DAG is the three-leg LSH match — the r17
+    // streaming gate that DAG is the batch's LSH match — the r17
     // stage profile read the capped drain (q116) ~1.4 s over the
     // uncapped one (q115), most of it the re-executed legs (exchange
     // reuse does not cover the swapped-projection branch under AQE).
@@ -793,8 +796,10 @@ object Dedup {
    *  scratch. For a cheap frame (a drained memory table, a checkpointed
    *  batch) that is the intended ~free bounded count; for an expensive
    *  un-materialized plan it pays the upstream twice — materialize first
-   *  (localCheckpoint/persist) and pass the handle, as the streaming
-   *  gates do with their checkpointed batch signatures. */
+   *  (localCheckpoint/persist) and pass the handle, as q114 does with
+   *  its weighted frame. A frame the caller will read on the driver
+   *  anyway needs no probe: [[localSignatures]]' bounded collect is the
+   *  read and the size check in one action. */
   def maybeBroadcast(df: DataFrame, maxRows: Long = 1L << 18): DataFrame =
     if (fitsBroadcast(df, maxRows)) broadcast(df) else df
 
@@ -804,6 +809,47 @@ object Dedup {
   private[graft] def fitsBroadcast(df: DataFrame, maxRows: Long): Boolean = {
     val probe = math.min(maxRows, (Int.MaxValue - 1).toLong).toInt
     maxRows > 0 && df.limit(probe + 1).count() <= maxRows
+  }
+
+  /** A batch's (id, mh0..mh{k-1}) signature rows, read to the driver when
+   *  the frame holds at most `maxRows` rows; `None` over the bound (and
+   *  always when `maxRows` is 0). One bounded `limit(maxRows + 1)`
+   *  collect is both the read and the broadcast-size probe, so a batch
+   *  over the bound never reaches the driver past that limit — and a
+   *  batch under it reaches the driver anyway when it is broadcast.
+   *  Rows sharing an id merge by element-wise min: the MinHash of a
+   *  union of shingle sets is the element-wise min of the per-set
+   *  MinHashes, so a per-row frame ([[minHashSignaturesInline]])
+   *  merges to exactly [[minHashSignatures]]' group-by-id result.
+   *  Sorted by id. */
+  private[graft] def localSignatures(sigs: DataFrame, numHashes: Int,
+                                     maxRows: Long): Option[Seq[Row]] =
+    if (maxRows <= 0) None
+    else {
+      val probe = math.min(maxRows, (Int.MaxValue - 1).toLong).toInt
+      val rows = sigs.filter(col("id").isNotNull)
+        .select(col("id").cast("long") +: (0 until numHashes).map(j => col(s"mh$j").cast("long")): _*)
+        .limit(probe + 1).collect()
+      if (rows.length > maxRows) None
+      else {
+        val merged = collection.mutable.HashMap.empty[Long, Array[Long]]
+        rows.foreach { r =>
+          val sig = merged.getOrElseUpdate(r.getLong(0), Array.fill(numHashes)(Long.MaxValue))
+          (0 until numHashes).foreach(j => sig(j) = math.min(sig(j), r.getLong(j + 1)))
+        }
+        Some(merged.toSeq.sortBy(_._1).map { case (id, sig) =>
+          Row.fromSeq(id +: sig.toSeq) })
+      }
+    }
+
+  /** [[localSignatures]]' rows as a driver-local frame (a `LocalRelation`):
+   *  no lineage, so reading it again re-runs nothing upstream and it
+   *  needs no cut, persist or probe. */
+  private[graft] def localFrame(spark: org.apache.spark.sql.SparkSession,
+                                rows: Seq[Row], numHashes: Int): DataFrame = {
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), StructType(
+      ("id" +: (0 until numHashes).map(j => s"mh$j")).map(StructField(_, LongType, nullable = false))))
   }
 
   /** Keep-list from candidate pairs: every id in a duplicate cluster mapped
@@ -1010,47 +1056,47 @@ object Dedup {
    * The per-batch EDGE SET of the incremental resolution lifecycle — the
    * one builder behind [[resolveUpdate]] (d26) and
    * [[SoftDedupGate.ingest]] (q115/q116). The batch signatures `sigs`
-   * are banded once ([[bandSignatures]]) and matched, in this leg order:
+   * are banded once ([[bandSignatures]]) and matched in ONE join of the
+   * one pair kernel ([[bandPairs]]) against ONE streamed side:
    *
-   *  1. against `indexBands` — the index in banded form, one-sided
-   *     (never index×index);
-   *  2. against themselves — the batch-internal leg, `id_a < id_b`;
-   *  3. against `retained` when given — the gate's signatures of every
-   *     PREVIOUS micro-batch, one-sided like the index leg.
+   *  - `indexBands` — the index in banded form (never index×index);
+   *  - `retained` when given — the gate's signatures of every PREVIOUS
+   *    micro-batch;
+   *  - the batch's own bands, marked `own`.
    *
-   * Every leg is the one pair kernel ([[bandPairs]]), so no leg runs a
-   * pair `distinct` or a signature re-attach. One broadcast-size probe of
-   * `sigs` ([[fitsBroadcast]] at `broadcastBatchMaxRows`) decides the
-   * pin: a small batch is broadcast in all three legs (the batch-internal
-   * self-join too), so the index and retained sides stream with no
-   * exchange. `maxCandidatesPerDoc` > 0 keeps each document's top
-   * candidates over the symmetrized union ([[capCandidatesSym]]); 0
+   * The kernel orders per row: a batch row pairs with every index and
+   * retained row, and with its own rows only as `id_a < id_b` (the
+   * batch-internal self-join). That is exactly the pair multiset of
+   * three separate legs (index, batch-internal, retained), with no pair
+   * `distinct` and no signature re-attach. `pinBatch` broadcasts the
+   * batch (a caller that read it locally knows it is small), so the
+   * whole streamed side passes the join with no exchange; unpinned, the
+   * planner shuffles. `maxCandidatesPerDoc` > 0 keeps each document's
+   * top candidates over the symmetrized pairs ([[capCandidatesSym]]); 0
    * keeps every pair.
    *
    * The (id_a, id_b) result is cut EAGERLY: [[resolveUpdateFromEdges]]
    * consumes an edge list twice (the endpoints frame + the CC base
    * checkpoint), and each consumption would re-run the banded index
    * join. Batch-neighborhood-sized — the same localCheckpoint discipline
-   * as [[clusterLabels]]. The probe and every leg read `sigs`, so the
-   * caller materializes it first and owns that storage.
+   * as [[clusterLabels]]. Both join sides read `sigs`: pass a local frame
+   * ([[localFrame]]) or a materialized one.
    */
-  private[graft] def batchEdges(sigs: DataFrame, indexBands: DataFrame,
+  private[graft] def batchEdges(sigs: DataFrame, pinBatch: Boolean, indexBands: DataFrame,
       retained: Option[DataFrame], numHashes: Int, bands: Int,
-      minEstJaccard: Double, broadcastBatchMaxRows: Long,
-      maxCandidatesPerDoc: Int): DataFrame = {
-    val small = fitsBroadcast(sigs, broadcastBatchMaxRows)
+      minEstJaccard: Double, maxCandidatesPerDoc: Int): DataFrame = {
     val batchBands = bandSignatures(sigs, numHashes, bands)
-    def leg(sideBands: DataFrame, ordered: Boolean) =
-      bandPairs(batchBands, sideBands, numHashes, bands, minEstJaccard, ordered, pinA = small)
-    val legs = Seq(leg(indexBands, ordered = false), leg(batchBands, ordered = true)) ++
-      retained.map(r => leg(bandSignatures(r, numHashes, bands), ordered = false))
-    val all = legs.reduce(_ unionAll _)
+    val streamed = ((indexBands +: retained.map(bandSignatures(_, numHashes, bands)).toSeq)
+      .map(_.withColumn("own", lit(false))) :+ batchBands.withColumn("own", lit(true)))
+      .reduce(_ unionAll _)
+    val all = bandPairs(batchBands, streamed, numHashes, bands, minEstJaccard,
+      ordered = col("b.own"), pinA = pinBatch)
     val budgeted =
       if (maxCandidatesPerDoc > 0) capCandidatesSym(all, maxCandidatesPerDoc)
       else all
-    // With the batch broadcast no leg has an exchange, so the result has
-    // one partition per streamed input partition (index cut, batch,
-    // every retained part), and each later consumer pays a task for each.
+    // With the batch broadcast the join has no exchange, so the result
+    // has one partition per streamed input partition (index cut, each
+    // retained part, batch), and each later consumer pays a task for each.
     // Coalescing (narrow) to the session's shuffle width keeps the cut
     // as narrow as a shuffled edge list would be.
     val width = sigs.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
@@ -1061,9 +1107,9 @@ object Dedup {
    * Incremental resolution UPDATE, signature layer (d26): the
    * continuous-ingest maintenance pass for the resolution-artifact
    * lifecycle. The new batch's pairs come from [[batchEdges]] — the
-   * edge builder it shares with [[SoftDedupGate]] — here with the index
-   * and batch-internal legs only. Banding each part is identical to
-   * banding the union corpus, so those are EXACTLY the pairs a full
+   * edge builder it shares with [[SoftDedupGate]] — here against the
+   * index and the batch's own rows only. Banding each part is identical
+   * to banding the union corpus, so those are EXACTLY the pairs a full
    * union re-resolve would add — so [[resolveUpdateFromEdges]]' output
    * is the full union resolution at batch-sized cost. Write the result
    * back as the new artifact (re-stamp with [[corpusFingerprint]] of
@@ -1073,20 +1119,24 @@ object Dedup {
                     numHashes: Int = 8, bands: Int = 4,
                     minEstJaccard: Double = 0.5, iterations: Int = 8,
                     broadcastBatchMaxRows: Long = 1L << 18): DataFrame = {
-    // The batch signature subtree otherwise appears 4x across the edge
-    // plan (the broadcast probe, the index leg's banded side, both sides
-    // of the batch-internal leg) — persist it once. batchEdges' EAGER
-    // cut fully materializes every consumer, so the cache is freed
-    // before returning: a bare library caller invoking resolveUpdate per
-    // ingest cycle must not accumulate batch-sized storage blocks (the
-    // CacheLease registration stays so a surrounding actor scope's
-    // deferred unpersist is a harmless no-op). The index side is read
-    // once, by the index leg's band join.
-    val ns = CacheLease.persist(newSigs)
-    val edges = batchEdges(ns, bandSignatures(indexSigs, numHashes, bands), None,
-      numHashes, bands, minEstJaccard, broadcastBatchMaxRows, maxCandidatesPerDoc = 0)
-    ns.unpersist()
-    resolveUpdateFromEdges(labels, edges, iterations)
+    // The index side is read once, by the band join. A batch within the
+    // bound is read once, to the driver, and joins as a local frame.
+    def edges(sigs: DataFrame, pin: Boolean) =
+      batchEdges(sigs, pin, bandSignatures(indexSigs, numHashes, bands), None,
+        numHashes, bands, minEstJaccard, maxCandidatesPerDoc = 0)
+    val newEdges = localSignatures(newSigs, numHashes, broadcastBatchMaxRows) match {
+      case Some(rows) => edges(localFrame(newSigs.sparkSession, rows, numHashes), pin = true)
+      case None =>
+        // over the bound both join sides read the batch subtree: persist
+        // it once. The eager edge cut materializes every consumer, so the
+        // cache is freed before returning — a bare library caller
+        // invoking resolveUpdate per ingest cycle must not accumulate
+        // batch-sized storage blocks (the CacheLease registration stays,
+        // so a surrounding actor scope's deferred unpersist is a no-op)
+        val ns = CacheLease.persist(newSigs)
+        try edges(ns, pin = false) finally ns.unpersist()
+    }
+    resolveUpdateFromEdges(labels, newEdges, iterations)
   }
 
   /**
@@ -1379,15 +1429,10 @@ object Dedup {
  * closing the one blindness of the stream-static gate shape (q114): two
  * stream documents duplicating EACH OTHER with no index counterpart.
  * Each micro-batch's edges come from [[Dedup.batchEdges]], the builder
- * [[Dedup.resolveUpdate]] also uses, with all three legs at
- * batch-neighborhood cost:
- *
- *  1. against the prebuilt index signatures — the one-sided join (never
- *     index×index);
- *  2. against itself — the batch-internal leg;
- *  3. against the retained signatures of every PREVIOUS micro-batch —
- *     the cross-batch leg (a dup pair split across micro-batches still
- *     links).
+ * [[Dedup.resolveUpdate]] also uses: one join of the batch against the
+ * prebuilt index signatures (never index×index), the retained
+ * signatures of every PREVIOUS micro-batch (a dup pair split across
+ * micro-batches still links) and the batch itself (within-batch pairs).
  *
  * Post-drain, the accumulated edges fold into the persisted resolution
  * via [[Dedup.resolveUpdateFromEdges]], so the assigned weights are
@@ -1397,36 +1442,47 @@ object Dedup {
  * Scale shape: the index side is materialized ONCE per gate, already
  * BANDED ([[Dedup.bandSignatures]]: one row per (document, band) with
  * the full signature) — an eager localCheckpoint in the constructor,
- * before the first micro-batch — and held for the gate's life: every
- * ingest's index leg is one join of the broadcast banded batch against
- * that cut, with no exchange, no pair distinct and no signature
- * re-attach, and [[rebase]] reads the signatures back from its band-0
- * rows. No micro-batch re-scans, re-shingles, re-groups or re-bands the
- * index source. The cut holds `bands` rows per index document (~96 B
- * each at the defaults) where a signature cut held one (~80 B).
- * Per-batch frames are localCheckpointed too (lineage truncation — the
- * iterative-accumulation discipline of [[Dedup.clusterLabels]]); parts
- * accumulate as a LIST of materialized frames unioned lazily, never
- * re-checkpointing old parts. Batch-side broadcasts ride
- * [[Dedup.lshMatches]]' measured row-bound pin (`broadcastBatchMaxRows`
- * — over the bound, shuffle joins), probed once per micro-batch by
- * [[Dedup.batchEdges]] and shared by the index and retained legs. The
- * retained-leg cost grows with the stream's history; a long-lived
+ * before the first micro-batch — and held for the gate's life: no
+ * micro-batch re-scans, re-shingles, re-groups or re-bands the index
+ * source, and [[rebase]] reads the signatures back from its band-0
+ * rows. The cut holds `bands` rows per index document (~96 B each at
+ * the defaults) where a signature cut held one (~80 B).
+ *
+ * A micro-batch is signed per row ([[Dedup.minHashSignaturesInline]]:
+ * no shingle shuffle) and read to the driver by ONE bounded collect
+ * ([[Dedup.localSignatures]] at `broadcastBatchMaxRows`), which is also
+ * the broadcast-size probe. Within the bound the batch is a local frame:
+ * no cut, no persist, no probe; it is broadcast, and the index cut, the
+ * retained signatures and the batch's own rows stream through one join
+ * with no exchange. One micro-batch is then two SQL executions (the
+ * collect, the edge cut). Over the bound the batch takes the shuffle
+ * path: aggregate signatures ([[Dedup.minHashSignatures]]), an eager
+ * cut, shuffle joins — it never reaches the driver past the collect's
+ * limit.
+ *
+ * Retained signatures: small batches' rows stay on the DRIVER as ONE
+ * local frame, capped at `broadcastBatchMaxRows` rows in total (one
+ * broadcast's worth); past the cap they are cut once to executor
+ * storage and the driver starts a fresh frame. Over-bound batches are
+ * retained as their cuts. A local frame is never a codegen-stage root,
+ * so equal-shaped micro-batches plan to the same generated classes and
+ * compile none after the first batch that has a retained part. The
+ * retained cost grows with the stream's history; a long-lived
  * production gate periodically [[rebase]]s — fold the retained
  * signatures into the index and the edges into the resolution, hand a
  * fresh gate the persisted result (MlSpec pins rebased == never-
  * rebased over the same ingest history).
  *
  * `maxCandidatesPerDoc` (0 = unlimited) is the per-document candidate
- * BUDGET threaded through all three legs — d28's device applied at
+ * BUDGET applied to each batch's pairs — d28's device applied at
  * ingest: banded chance collisions densify with corpus scale (the q115
  * sf2 watch item's physics), and an unbounded batch doc colliding with
  * a hot band bucket would otherwise fold an unbounded edge set. The cap
  * keeps each batch's top-`cap` est-jaccard candidates per document over
- * the SYMMETRIZED union of the legs ([[Dedup.capCandidatesSym]] — a
- * true per-doc budget, not the one-sided emitted-pair cap), so the fold
- * cost per batch is ≤ cap × batch rows however dense the bucket space
- * gets. True near-dups dominate chance collisions in est-jaccard by
+ * the SYMMETRIZED pairs ([[Dedup.capCandidatesSym]] — a true per-doc
+ * budget, not the one-sided emitted-pair cap), so the fold cost per
+ * batch is ≤ cap × batch rows however dense the bucket space gets.
+ * True near-dups dominate chance collisions in est-jaccard by
  * construction (chance survivors at est ≥ 0.5 need 4/8 matching
  * minhashes), so a cap at or above the real per-doc duplicate degree
  * leaves the resolution IDENTICAL (the q116 oracle re-resolves the full
@@ -1439,24 +1495,46 @@ final class SoftDedupGate(labels: DataFrame, indexSigs: DataFrame,
     maxCandidatesPerDoc: Int = 0) extends Serializable {
   import org.apache.spark.sql.functions.col
   // the index side is fixed for the gate's life: cut it once, here, in
-  // the banded form every ingest's index leg joins, so no ingest re-runs
-  // the index plan or re-bands it
+  // the banded form every ingest joins, so no ingest re-runs the index
+  // plan or re-bands it
   private[graft] val indexBands =
     Dedup.bandSignatures(indexSigs, numHashes, bands).localCheckpoint(true)
   // appended by the stream-execution thread inside foreachBatch, read by
   // the caller after awaitTermination; all access synchronized
   private var edgeParts: List[DataFrame] = Nil
-  private var sigParts: List[DataFrame] = Nil
+  // retained signatures: `heldRows` on the driver (`held` is their local
+  // frame), `cutParts` in executor storage
+  private var heldRows: Vector[Row] = Vector.empty
+  private var held: Option[DataFrame] = None
+  private var cutParts: List[DataFrame] = Nil
+
+  private def retainedParts: List[DataFrame] = held.toList ++ cutParts
 
   /** foreachBatch body: fold one (idCol, textCol) micro-batch in. */
   def ingest(batch: DataFrame, textCol: String, idCol: String): Unit = synchronized {
-    // retained for the gate's life (later batches' cross-batch leg,
-    // rebase), so the batch signatures are cut, not persisted
-    val sigs = Dedup.minHashSignatures(batch, textCol, idCol, numHashes, shingleLen)
-      .localCheckpoint(true)
-    edgeParts ::= Dedup.batchEdges(sigs, indexBands, sigParts.reduceOption(_ unionAll _),
-      numHashes, bands, minEstJaccard, broadcastBatchMaxRows, maxCandidatesPerDoc)
-    sigParts ::= sigs
+    val retained = retainedParts.reduceOption(_ unionAll _)
+    def edges(sigs: DataFrame, pin: Boolean) = Dedup.batchEdges(sigs, pin, indexBands,
+      retained, numHashes, bands, minEstJaccard, maxCandidatesPerDoc)
+    Dedup.localSignatures(
+        Dedup.minHashSignaturesInline(batch, textCol, idCol, numHashes, shingleLen),
+        numHashes, broadcastBatchMaxRows) match {
+      case Some(rows) =>
+        val spark = batch.sparkSession
+        edgeParts ::= edges(Dedup.localFrame(spark, rows, numHashes), pin = true)
+        heldRows ++= rows
+        val all = Dedup.localFrame(spark, heldRows, numHashes)
+        if (heldRows.size > broadcastBatchMaxRows) {
+          cutParts ::= all.localCheckpoint(true)
+          heldRows = Vector.empty
+          held = None
+        } else held = Some(all)
+      case None =>
+        // retained for the gate's life, so the signatures are cut, not persisted
+        val sigs = Dedup.minHashSignatures(batch, textCol, idCol, numHashes, shingleLen)
+          .localCheckpoint(true)
+        edgeParts ::= edges(sigs, pin = false)
+        cutParts ::= sigs
+    }
   }
 
   /** Post-drain: the updated resolution label frame — what writing the
@@ -1476,11 +1554,11 @@ final class SoftDedupGate(labels: DataFrame, indexSigs: DataFrame,
 
   /** Ids of every document the gate ingested (one `id` column) — the
    *  natural `weights` argument after a drain. Reads the retained
-   *  signature parts; empty frame if nothing was ingested. */
+   *  signatures; empty frame if nothing was ingested. */
   def ingestedIds(): DataFrame = synchronized {
     // distinct: a doc re-ingested in a later micro-batch must not
     // duplicate its weight row
-    sigParts.map(_.select(col("id"))).reduceOption(_ unionAll _)
+    retainedParts.map(_.select(col("id"))).reduceOption(_ unionAll _)
       .map(_.distinct())
       .getOrElse(labels.select(col("id")).limit(0))
   }
@@ -1488,14 +1566,13 @@ final class SoftDedupGate(labels: DataFrame, indexSigs: DataFrame,
   /** REBASE — the long-lived gate's periodic maintenance move: fold the
    *  retained stream signatures into the index and the accumulated
    *  edges into the resolution, returning (newIndexSigs, newLabels) to
-   *  persist and hand a FRESH gate. Bounds the retained-leg cost (which
+   *  persist and hand a FRESH gate. Bounds the retained cost (which
    *  otherwise grows with the stream's whole history): after a rebase
-   *  the stream docs ARE the index, so future batches match them
-   *  through the one-sided index leg instead of the retained leg.
-   *  Equivalence is by construction — lshMatches vs (index ∪ retained)
-   *  produces exactly the index-leg ∪ retained-leg pairs — and MlSpec
-   *  pins it end-to-end: weights after a rebase equal weights of the
-   *  never-rebased gate over the same ingest history.
+   *  the stream docs ARE the index, so future batches match them as
+   *  index rows instead of retained ones. Equivalence is by
+   *  construction — both are streamed rows paired with every batch row —
+   *  and MlSpec pins it end-to-end: weights after a rebase equal weights
+   *  of the never-rebased gate over the same ingest history.
    *
    *  The label frame comes back STAMPED with the folded index's
    *  [[Dedup.signatureFingerprint]] (fp_n, fp_h on every row) — a
@@ -1508,7 +1585,7 @@ final class SoftDedupGate(labels: DataFrame, indexSigs: DataFrame,
     // every index row has exactly one band-0 row carrying its signature
     val indexCut = indexBands.filter(col("band") === 0)
       .select(col("id") +: (0 until numHashes).map(j => col(s"mh$j")): _*)
-    val newIndex = (indexCut :: sigParts.reverse).reduce(_ unionAll _)
+    val newIndex = (indexCut :: retainedParts).reduce(_ unionAll _)
     (newIndex, updatedLabels().crossJoin(
       org.apache.spark.sql.functions.broadcast(
         Dedup.signatureFingerprint(newIndex))))

@@ -59,8 +59,8 @@ import org.apache.spark.sql.functions._
  *  cdc-clean: the cleaned corpus for cdc-spans' report — strip every
  *  non-first occurrence of a dedup-eligible CDC chunk, reassemble docs;
  *  stream-gate: the streaming ingest gate with within-stream linking —
- *  drains a streaming `view` through a [[SoftDedupGate]] (index +
- *  cross-batch + batch-internal legs) and emits d24-style weights over
+ *  drains a streaming `view` through a [[SoftDedupGate]] (one join per
+ *  batch against index ∪ earlier batches ∪ itself) and emits d24-style weights over
  *  the updated resolution ([[Dedup.resolveUpdateFromEdges]]);
  *  `maxCandidatesPerDoc` budgets each doc's candidates per batch;
  *  stream-gate-rebase: the same drain, emitting the REBASED gate state
@@ -68,7 +68,7 @@ import org.apache.spark.sql.functions._
  *  resolution artifact), extra view `sigsView` = index ∪ retained
  *  stream signatures (the next drain's `indexView` with
  *  `indexIsSignatures: true`) — the long-lived gate's periodic
- *  maintenance move, bounding the retained-leg cost;
+ *  maintenance move, bounding the retained cost;
  *  fingerprint: the 1-row (fp_n, fp_h) [[Dedup.corpusFingerprint]]
  *  sidecar of `view` — write it with the corpus, then pass it back as
  *  `fingerprintView` so every artifact integrity check compares two
@@ -106,11 +106,13 @@ class DedupActor extends Actor {
   // integrity checks compare two stored rows instead of re-scanning the
   // corpus (build it with method `fingerprint` WHEN the corpus lands)
   protected var fingerprintView: String = ""
-  // row bound for every ingest-shaped broadcast (lshMatches' measured
-  // limit+count pin; over the bound the joins fall back to shuffles)
+  // row bound for every ingest-shaped broadcast: a batch within it is
+  // read to the driver by one bounded collect and broadcast; over it the
+  // joins fall back to shuffles. The stream gate also caps its
+  // driver-held retained signatures at this many rows
   protected var broadcastMaxRows: Long = 1L << 18
   // stream-gate per-document candidate budget (0 = unlimited): d28's
-  // device threaded through the gate's three legs — bounds the per-batch
+  // device applied to each micro-batch's pairs — bounds the per-batch
   // fold cost when banded chance collisions densify at corpus scale
   protected var maxCandidatesPerDoc: Int = 0
   // stream-gate-rebase: the extra-view name for the folded index
@@ -420,10 +422,10 @@ class DedupActor extends Actor {
           minEstJaccard, broadcastMaxRows)
       case "stream-gate" | "stream-gate-rebase" =>
         // q115's shape as a pipeline step: drain the STREAMING `view`
-        // through a SoftDedupGate (per micro-batch: one-sided LSH vs the
-        // index + retained cross-batch leg + batch-internal pairs —
-        // within-stream duplicates LINK, the case the stream-static gate
-        // shape is blind to). `stream-gate` then emits d24-style ppm
+        // through a SoftDedupGate (per micro-batch: one LSH join of the
+        // batch against the index, the retained earlier batches and
+        // itself — within-stream duplicates LINK, the case the
+        // stream-static gate shape is blind to). `stream-gate` then emits d24-style ppm
         // weights over the updated resolution — exactly what the next
         // resolve-update maintenance pass would assign; `stream-gate-
         // rebase` instead emits the REBASED artifacts — the long-lived
@@ -435,12 +437,14 @@ class DedupActor extends Actor {
         // `sigsView` = the folded index signatures (index ∪ retained
         // stream signatures — the next drain's indexView with
         // indexIsSignatures: true). After a rebase the stream docs ARE
-        // the index, so future batches match them through the one-sided
-        // index leg and the retained-leg cost resets to zero.
+        // the index, so future batches match them as index rows and the
+        // retained cost resets to zero.
         // The index side (indexView's signatures — computed here from text
         // unless indexIsSignatures) is materialised ONCE, when the gate is
         // built, before the first micro-batch, and held for the drain: no
-        // micro-batch re-reads or re-shingles indexView.
+        // micro-batch re-reads or re-shingles indexView. A micro-batch
+        // within broadcastMaxRows costs one bounded collect and one edge
+        // cut (two SQL executions).
         // AvailableNow makes the step a bounded job; production runs the
         // same gate under a processing-time trigger.
         require(df.isStreaming,

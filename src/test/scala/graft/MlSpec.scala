@@ -982,7 +982,7 @@ class MlSpec extends SparkSpec {
     g0.ingest(b2, "text", "doc_id")
     // rebased: fold batch 1 into the index + labels, hand a FRESH gate
     // the folded state, then ingest batch 2 — its dup of a batch-1 doc
-    // now matches through the one-sided INDEX leg, not the retained leg
+    // now matches it as an INDEX row, not a retained one
     val g1 = new graft.ml.SoftDedupGate(labels, idxSigs)
     g1.ingest(b1, "text", "doc_id")
     val (idx2, lab2) = g1.rebase()
@@ -1039,6 +1039,9 @@ class MlSpec extends SparkSpec {
     // lazy plan over the parquet scan until the gate cuts them
     val idxSigs = Dedup.minHashSignatures(spark.read.parquet(dir), "text", "doc_id")
     val labels = Seq.empty[(Long, Long)].toDF("id", "keep_id")
+    val fileBatchDir = tmpDir("gate-batch") + "/batch.parquet"
+    Seq((105L, txt(40)), (106L, base + " ww")).toDF("doc_id", "text")
+      .coalesce(1).write.parquet(fileBatchDir)
     // per phase: (jobs, SQL executions, executions whose plan scans `dir`),
     // counted only for this test's tagged work
     val tag = "soft-dedup-gate-pin"
@@ -1078,33 +1081,145 @@ class MlSpec extends SparkSpec {
         Seq((100L, base), (101L, base + " dup dup")),
         Seq((102L, base + " zz yy")),
         Seq((103L, txt(40)), (104L, base + " qq")))
+      // a one-file batch, as the file stream delivers with maxFilesPerTrigger 1
+      val fileBatch = spark.read.parquet(fileBatchDir)
       val per = batches.map { b =>
         phase(gate.ingest(b.toDF("doc_id", "text"), "text", "doc_id"))._2
-      }
-      // no batch scans the index; per ingest: batch-signature cut, ONE
-      // broadcast-size probe shared by all three legs, edge cut. Every
-      // leg broadcasts the batch, so the retained leg adds no job
-      per.foreach { case (_, sql, sc) => sc shouldBe 0; sql shouldBe 3 }
-      per.map(_._1) shouldBe Seq(6, 6, 6)
+      } :+ phase(gate.ingest(fileBatch, "text", "doc_id"))._2
+      // no batch scans the index; per ingest: ONE bounded collect of the
+      // batch signatures (also the broadcast-size probe: no cut, no
+      // probe) and the edge cut, whose one join streams index ∪ retained
+      // ∪ batch past the broadcast batch. Jobs: the edge cut's broadcast
+      // and checkpoint, plus the collect's limit scan — one job per batch
+      // partition tried, so a 2-row local batch (2 partitions) takes 4
+      // jobs and a single-partition batch 3
+      per.foreach { case (_, sql, sc) => sc shouldBe 0; sql shouldBe 2 }
+      per.map(_._1) shouldBe Seq(4, 3, 4, 3)
       // and the result is the linked cluster (index doc 1 + 100..102, 104)
       val w = gate.weights(Seq(1L, 100L, 102L, 103L, 104L).toDF("doc_id"), "doc_id")
         .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
       Seq(1L, 100L, 102L, 104L).foreach(id => w(id) should be > 1L)
       // the library fold over the same batches builds its edge set with
       // the gate's builder, but nothing cuts its index in advance: the
-      // edge cut's plan scans the index source once, in the index leg's
-      // band join, on every call
+      // edge cut's plan scans the index source once, in its band join, on
+      // every call. The batch is read once, to the driver, by the bounded
+      // collect
       val upd = batches.map { b =>
         phase(Dedup.resolveUpdate(labels, idxSigs, Dedup.minHashSignatures(
           b.toDF("doc_id", "text"), "text", "doc_id")))._2
       }
       upd.foreach { case (jobs, sql, sc) =>
-        sc shouldBe 1; sql shouldBe 6; jobs shouldBe 21
+        sc shouldBe 1; sql shouldBe 6; jobs shouldBe 18
       }
     } finally {
       spark.sparkContext.removeJobTag(tag)
       spark.sparkContext.removeSparkListener(listener)
     }
+  }
+
+  test("SoftDedupGate: the local batch signatures equal the aggregate form (shared id, NULL text)") {
+    implicit val s = spark
+    import s.implicits._
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    val rnd = new scala.util.Random(37)
+    val words = Vector("alpha", "bravo", "carol", "delta", "echo",
+      "fox", "golf", "hotel", "india", "jazz")
+    def txt(n: Int) = Seq.fill(n)(words(rnd.nextInt(words.size))).mkString(" ")
+    val idxSigs = Dedup.minHashSignatures(
+      Seq((1L, txt(50))).toDF("doc_id", "text"), "text", "doc_id")
+    val gate = new graft.ml.SoftDedupGate(Seq.empty[(Long, Long)].toDF("id", "keep_id"), idxSigs)
+    // id 100 carries two different texts (its signature is the min over
+    // both shingle sets); id 101's text is NULL (no signature at all)
+    val batch = Seq((100L, txt(30)), (100L, txt(20)), (101L, null: String), (102L, txt(2)))
+      .toDF("doc_id", "text")
+    gate.ingest(batch, "text", "doc_id")
+    val folded = gate.rebase()._1
+    // the batch is held as a local frame, not a cut
+    folded.queryExecution.analyzed.collect { case l: LocalRelation => l } should have size 1
+    def sigs(df: org.apache.spark.sql.DataFrame) = df.filter(col("id") >= 100L)
+      .collect().map(r => (0 to 8).map(r.getAs[Long])).toSet
+    val expected = sigs(Dedup.minHashSignatures(batch, "text", "doc_id"))
+    expected.map(_.head) shouldBe Set(100L, 102L)
+    sigs(folded) shouldBe expected
+  }
+
+  test("SoftDedupGate: over-bound batches and a retained spill to a cut give the default gate's weights") {
+    implicit val s = spark
+    import s.implicits._
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    import org.apache.spark.sql.execution.LogicalRDD
+    val rnd = new scala.util.Random(41)
+    val words = Vector("alpha", "bravo", "carol", "delta", "echo",
+      "fox", "golf", "hotel", "india", "jazz")
+    def txt(n: Int) = Seq.fill(n)(words(rnd.nextInt(words.size))).mkString(" ")
+    val (base, other) = (txt(60), txt(60))
+    val idxSigs = Dedup.minHashSignatures(
+      Seq((1L, base + " index copy"), (2L, txt(50))).toDF("doc_id", "text"), "text", "doc_id")
+    val labels = Seq.empty[(Long, Long)].toDF("id", "keep_id")
+    // every batch has 2 rows: index links, within-batch links and
+    // cross-batch links, on two clusters
+    val batches = Seq(
+      Seq((100L, base), (101L, other)),
+      Seq((102L, other + " dup dup"), (103L, txt(40))),
+      Seq((104L, base + " zz yy"), (105L, other + " qq")))
+    val ids = Seq(1L, 2L, 100L, 101L, 102L, 103L, 104L, 105L).toDF("doc_id")
+    def drained(bound: Long) = {
+      val g = new graft.ml.SoftDedupGate(labels, idxSigs, broadcastBatchMaxRows = bound)
+      batches.foreach(b => g.ingest(b.toDF("doc_id", "text"), "text", "doc_id"))
+      val plan = g.rebase()._1.queryExecution.analyzed
+      val w = g.weights(ids, "doc_id").collect()
+        .map(r => (r.getLong(0), (r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
+      // (local retained frames, cuts: the index plus retained cuts)
+      (w, (plan.collect { case l: LocalRelation => l }.size,
+        plan.collect { case r: LogicalRDD => r }.size))
+    }
+    val (ref, refParts) = drained(1L << 18)
+    refParts shouldBe ((1, 1))
+    Seq(1L, 100L, 104L).foreach(id => ref(id) shouldBe ((1L, 3L, 333333L)))
+    Seq(101L, 102L, 105L).foreach(id => ref(id) shouldBe ((101L, 3L, 333333L)))
+    Seq(2L, 103L).foreach(id => ref(id)._3 shouldBe 1000000L)
+    // bound 1: every batch is over it — aggregate signatures, an eager
+    // cut and shuffle joins, each batch retained as its cut
+    val (over, overParts) = drained(1)
+    overParts shouldBe ((0, 4))
+    over shouldBe ref
+    // bound 3: the batches fit, but the held rows pass 3 at the second
+    // batch and are cut once; the third batch is held again
+    val (spilled, spilledParts) = drained(3)
+    spilledParts shouldBe ((1, 2))
+    spilled shouldBe ref
+  }
+
+  test("SoftDedupGate: the 3rd and 4th equal-shaped micro-batches compile no new classes") {
+    implicit val s = spark
+    import s.implicits._
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val rnd = new scala.util.Random(43)
+    val words = Vector("alpha", "bravo", "carol", "delta", "echo",
+      "fox", "golf", "hotel", "india", "jazz")
+    def txt(n: Int) = Seq.fill(n)(words(rnd.nextInt(words.size))).mkString(" ")
+    val base = txt(60)
+    val idxSigs = Dedup.minHashSignatures(
+      Seq((1L, base + " index copy"), (2L, txt(50))).toDF("doc_id", "text"), "text", "doc_id")
+    val gate = new graft.ml.SoftDedupGate(Seq.empty[(Long, Long)].toDF("id", "keep_id"), idxSigs)
+    // the suite runs sequentially in its own forked JVM, so the JVM-wide
+    // compile counter moves only for this test's work
+    def compiles(f: => Unit): Long = {
+      val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      f
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
+    }
+    val per = (0 until 4).map { i =>
+      val b = Seq((100L + 2 * i, base + s" v$i"), (101L + 2 * i, txt(40))).toDF("doc_id", "text")
+      compiles(gate.ingest(b, "text", "doc_id"))
+    }
+    // the first batch plans without a retained part, the second adds it;
+    // from then on the plan is the same: the retained rows and the batch
+    // are local frames, which never root a codegen stage
+    per.drop(2) shouldBe Seq(0L, 0L)
+    val w = gate.weights(Seq(1L, 100L, 102L, 104L, 106L).toDF("doc_id"), "doc_id")
+      .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
+    w.values.toSet shouldBe Set(5L)
   }
 
   test("capCandidatesSym: true per-doc budget — chance edges in nobody's top-cap drop, planted edges survive") {
@@ -1663,10 +1778,10 @@ class MlSpec extends SparkSpec {
       plan.collect { case a: BaseAggregateExec => a } shouldBe empty
       out
     }
-    // the gate's index leg (what batchEdges joins per micro-batch) and
-    // the public kernel over the same cut signatures agree
+    // the batch against the gate's index cut (what batchEdges streams per
+    // micro-batch) and the public kernel over the same cut signatures agree
     val viaGate = leg(Dedup.bandPairs(Dedup.bandSignatures(batchSigs, 8, 4),
-      gate.indexBands, 8, 4, 0.5, ordered = false, pinA = true))
+      gate.indexBands, 8, 4, 0.5, ordered = lit(false), pinA = true))
     viaGate shouldBe leg(Dedup.lshMatches(batchSigs, idxSigs))
     viaGate shouldBe Set((100L, 1L))
   }
