@@ -72,13 +72,17 @@ object Launcher {
       acc ++ p.stringPropertyNames().toArray(Array.empty[String]).map(k => k -> p.getProperty(k))
     }
 
+  /** The application session's Spark confs: the config's `spark.*` keys
+   *  (reference: Launcher.scala:65-87), over no per-session artifact
+   *  isolation ([[Sessions.ArtifactIsolation]]) unless the config sets it. */
+  def sparkConfs(config: Map[String, String]): Map[String, String] =
+    Map(Sessions.ArtifactIsolation -> "false") ++ config.filter(_._1.startsWith("spark."))
+
   def main(argv: Array[String]): Unit = {
     val args = parseArgs(argv)
     val config = loadConfig(args.confFiles)
     val builder = SparkSession.builder()
-    // runtime spark confs from application config (reference: Launcher.scala:65-87)
-    config.collect { case (k, v) if k.startsWith("spark.") => (k, v) }
-      .foreach { case (k, v) => builder.config(k, v) }
+    sparkConfs(config).foreach { case (k, v) => builder.config(k, v) }
     implicit val spark: SparkSession = builder.getOrCreate()
     try run(args, config)
     finally spark.stop()

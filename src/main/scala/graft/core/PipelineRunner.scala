@@ -11,7 +11,8 @@ import scala.collection.mutable
  *
  * Reference: pipeline/PipelineRunner.scala:38-110. Semantics preserved:
  *  - one Spark sub-session per job unless singleSparkSession (:49) — local
- *    temp views do not leak across jobs, global_temp views do;
+ *    temp views do not leak across jobs, global_temp views do; the
+ *    sub-sessions share one executor class loader ([[graft.Sessions.subSession]]);
  *  - global views optionally localized at job start (:56-58,113-116);
  *  - input views must exist before an action runs (:67,119-134);
  *  - input views are ref-counted; 2nd reference => auto-persist
@@ -53,7 +54,7 @@ final class PipelineRunner(pipelineCtx: PipelineContext = PipelineContext()) {
     _metrics.clear()
     try jobs.foreach { job =>
       implicit val session: SparkSession =
-        if (ctxTemplate.singleSparkSession) rootSession else rootSession.newSession()
+        if (ctxTemplate.singleSparkSession) rootSession else graft.Sessions.subSession(rootSession)
       // system + pipeline-declared UDFs registered per job sub-session
       // (reference: PipelineRunner.scala:54)
       graft.functions.UdfRegistry.registerSystemUdfs(session)
@@ -150,9 +151,8 @@ final class PipelineRunner(pipelineCtx: PipelineContext = PipelineContext()) {
     //     per-action `plan-audit` actor covers targeted gates; this
     //     setting covers every action without writing one.
     for (threshold <- ctx.pipelineCtx.planAudit; df <- result) {
-      val findings = graft.plans.PlanAudit.audit(df)
+      val findings = graft.plans.PlanAudit.audit(df, threshold = threshold)
         .filterNot(f => ctx.pipelineCtx.planAuditAllowRules(f.rule))
-        .filter(f => graft.plans.PlanAudit.atLeast(f.severity, threshold))
       if (findings.nonEmpty) {
         record(job, action, None, t0, s"failed: plan audit ($threshold)")
         throw new IllegalStateException(

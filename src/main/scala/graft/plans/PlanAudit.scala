@@ -67,15 +67,25 @@ object PlanAudit {
    * Streaming frames are audited on the ANALYZED logical plan (their
    * optimized/physical plans only exist inside a started query; even
    * building them trips the batch-execution check), so the logical
-   * rules fire and the physical scan facts are skipped. */
+   * rules fire and the physical scan facts are skipped.
+   *
+   * Only findings at or above `threshold` are returned, and a pass that
+   * cannot reach it does not run: the physical pass reports `info` and
+   * `warn` only, so an `error` threshold skips rendering the formatted
+   * explain. */
   def audit(df: DataFrame,
             lowCardKeys: Set[String] = DefaultLowCardKeys,
-            boundedRows: Long = DefaultBoundedRows): Seq[PlanFinding] = {
-    if (df.isStreaming)
-      logicalFindings(df.queryExecution.analyzed, lowCardKeys, boundedRows)
-    else
-      logicalFindings(df.queryExecution.optimizedPlan, lowCardKeys, boundedRows) ++
-        physicalFindings(df.queryExecution.explainString(ExplainMode.fromString("formatted")))
+            boundedRows: Long = DefaultBoundedRows,
+            threshold: String = "info"): Seq[PlanFinding] = {
+    val findings =
+      if (df.isStreaming)
+        logicalFindings(df.queryExecution.analyzed, lowCardKeys, boundedRows)
+      else
+        logicalFindings(df.queryExecution.optimizedPlan, lowCardKeys, boundedRows) ++
+          (if (atLeast("warn", threshold))
+             physicalFindings(df.queryExecution.explainString(ExplainMode.fromString("formatted")))
+           else Nil)
+    findings.filter(f => atLeast(f.severity, threshold))
   }
 
   private def bounded(p: LogicalPlan, boundedRows: Long): Boolean =

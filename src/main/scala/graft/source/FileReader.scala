@@ -13,6 +13,10 @@ import org.apache.spark.sql.types.StructType
  * (:24-25,78-81), fallback-to-empty-frame on read failure when a ddl schema
  * or fallback SQL is given (:92-102), optional per-file row-count metrics
  * via groupBy(input_file_name) (:109-119).
+ *
+ * Without a ddl schema, a read of plain files (no directory, no glob)
+ * reuses the schema inferred by an earlier read of the same files (the
+ * memo of the companion object).
  */
 class FileReader extends Actor {
   protected var format: String = "parquet"
@@ -52,10 +56,15 @@ class FileReader extends Actor {
   override def run(ctx: JobContext)(implicit spark: SparkSession): Option[DataFrame] = {
     require(uris.nonEmpty, "FileReader: fileUri is required")
     val reader0 = spark.read.format(format).options(readOptions)
-    val reader = ddlSchema.fold(reader0)(reader0.schema)
+    val memoKey = if (ddlSchema.isEmpty) FileReader.schemaKey(format, readOptions, uris) else None
+    val reader = ddlSchema.orElse(memoKey.flatMap(FileReader.inferredSchema))
+      .fold(reader0)(reader0.schema)
     val df =
-      try reader.load(uris: _*)
-      catch {
+      try {
+        val loaded = reader.load(uris: _*)
+        memoKey.foreach(FileReader.remember(_, loaded.schema))
+        loaded
+      } catch {
         case e: Throwable if fallbackRead && ddlSchema.isDefined =>
           spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], ddlSchema.get)
         case e: Throwable => throw e
@@ -66,6 +75,47 @@ class FileReader extends Actor {
     }
     Some(df)
   }
+}
+
+object FileReader {
+
+  /** What an inferred schema depends on: the format, the read options,
+   *  each file's (path, length, modification time) and the session's
+   *  `spark.sql.*` confs. */
+  private final case class SchemaKey(format: String, options: Seq[(String, String)],
+                             files: Seq[(String, Long, Long)], sqlConfs: Seq[(String, String)])
+
+  private val MaxSchemas = 256
+
+  /** Bounded, least-recently-used, shared by every session of the JVM. */
+  private val schemas = new java.util.LinkedHashMap[SchemaKey, StructType](16, 0.75f, true) {
+    override def removeEldestEntry(e: java.util.Map.Entry[SchemaKey, StructType]): Boolean =
+      size > MaxSchemas
+  }
+
+  /** The memo key of a read, or None when a uri is not one existing
+   *  plain file: a directory or a glob can gain files that no status
+   *  read here would see. */
+  private def schemaKey(format: String, options: Map[String, String], uris: Seq[String])(
+      implicit spark: SparkSession): Option[SchemaKey] =
+    if (uris.exists(_.exists("*?[]{}\\".contains(_)))) None
+    else scala.util.Try {
+      val hadoopConf = spark.sparkContext.hadoopConfiguration
+      uris.map { u =>
+        val path = new org.apache.hadoop.fs.Path(u)
+        path.getFileSystem(hadoopConf).getFileStatus(path)
+      }
+    }.toOption.filter(_.forall(_.isFile)).map { statuses =>
+      SchemaKey(format, options.toSeq.sorted,
+        statuses.map(st => (st.getPath.toString, st.getLen, st.getModificationTime)),
+        spark.conf.getAll.filter(_._1.startsWith("spark.sql.")).toSeq.sorted)
+    }
+
+  private def inferredSchema(key: SchemaKey): Option[StructType] =
+    schemas.synchronized(Option(schemas.get(key)))
+
+  private def remember(key: SchemaKey, schema: StructType): Unit =
+    schemas.synchronized(schemas.put(key, schema))
 }
 
 /** Load a catalog table + optional filter predicate

@@ -253,6 +253,24 @@ class GuardRailSpec extends SparkSpec {
     spark.conf.get("spark.sql.shuffle.partitions") shouldBe "4"
     spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") shouldBe "true"
     spark.sparkContext.uiWebUrl shouldBe None
+    spark.conf.get(Sessions.ArtifactIsolation) shouldBe "false"
+    Sessions.subSession(spark).conf.get(Sessions.ArtifactIsolation) shouldBe "false"
+    // Launcher builds its own session: the same default, unless the
+    // application config sets the key
+    Launcher.sparkConfs(Map("a" -> "b"))(Sessions.ArtifactIsolation) shouldBe "false"
+    Launcher.sparkConfs(Map(Sessions.ArtifactIsolation -> "true"))(Sessions.ArtifactIsolation) shouldBe "true"
+  }
+
+  test("every sub-session comes from graft.Sessions.subSession") {
+    // a sub-session made elsewhere would get its own executor class loader
+    // and recompile every generated class its plans use
+    val call = "." + "newSession()"
+    val (helper, others) = sourceOffenders("src/main/scala", "")((_, l) => l.contains(call))
+      .partition(_.startsWith("src/main/scala/graft/Sessions.scala:"))
+    withClue("raw sub-sessions (use graft.Sessions.subSession): ") {
+      others shouldBe empty
+    }
+    helper should have size 1
   }
 
   test("every catalog query carries an oracle (no rows-only weak checks)") {

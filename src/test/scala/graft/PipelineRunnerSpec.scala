@@ -73,6 +73,54 @@ class PipelineRunnerSpec extends SparkSpec {
     spark.table("pa_out2").count() shouldBe 3
   }
 
+  test("pipeline-wide plan gate: an error gate still fails a cartesian join, a warn gate unpushed filters") {
+    // an error gate skips the physical pass (it reports info and warn
+    // only); the logical pass still runs and still fails a cartesian join
+    val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
+    val cross = li.crossJoin(spark.read.parquet(s"$sfDir/orders.parquet"))
+    graft.plans.PlanAudit.audit(cross, threshold = "error").map(_.rule) shouldBe Seq("cartesian-join")
+    def gated(threshold: String) = Pipeline("t", Seq(Job("j", Seq(
+      Action("scan", new graft.source.FileReader() {
+          override def run(ctx: JobContext)(implicit s: SparkSession): Option[DataFrame] =
+            Some(s.read.format(classOf[UnpushedFilterSource].getName).load())
+        }, Some(View("pg_out")))))),
+      singleSparkSession = true, planAudit = Some(threshold))
+    // the scan's explain block reports a data filter it did not push: a
+    // warn-level finding of the physical pass
+    val e = intercept[IllegalStateException] {
+      new PipelineRunner(PipelineContext(singleSparkSession = true)).run(gated("warn"))(spark)
+    }
+    e.getMessage should include("unpushed-filters")
+    new PipelineRunner(PipelineContext(singleSparkSession = true)).run(gated("error"))(spark)
+    spark.table("pg_out").columns shouldBe Array("id")
+  }
+
+  test("a pipeline's second identical run compiles no new class") {
+    // each job runs in its own sub-session; they share the executor class
+    // loader, so the codegen cache serves the second run's every class
+    import org.apache.spark.metrics.source.CodegenMetrics
+    def pipeline = Pipeline("twice", Seq(
+      Job("agg", Seq(
+        readerAction("tw_li"),
+        Action("sum", new SqlTransformer().sqlString(
+          "select l_returnflag, sum(l_quantity) as q from tw_li " +
+            "where l_discount < 0.05 group by l_returnflag"),
+          Some(View("tw_sum", global = true))))),
+      Job("write", Seq(
+        Action("write", new graft.sink.FileWriter().sinkFormat("parquet")
+          .fileUri(tmpDir("twice")).sourceView("global_temp.tw_sum"), None)))))
+    // the suite runs sequentially in its own forked JVM, so the JVM-wide
+    // compile counter moves only for this test's work
+    def compiles(): Long = {
+      val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      new PipelineRunner(PipelineContext()).run(pipeline)(spark)
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
+    }
+    compiles() should be > 0L
+    compiles() shouldBe 0L
+    spark.catalog.dropGlobalTempView("tw_sum")
+  }
+
   test("global views cross job sub-sessions, local views do not") {
     val probe = new Actor {
       var sawGlobal = false
@@ -219,4 +267,35 @@ class PipelineRunnerSpec extends SparkSpec {
     spark.catalog.tableExists("vb") shouldBe true
     spark.catalog.tableExists("va") shouldBe false
   }
+}
+
+/** An empty DSv2 table whose scan describes itself the way a connector
+ *  that could not push its filter does (an Iceberg-style explain block:
+ *  data filters, no pushed filters). */
+class UnpushedFilterSource extends org.apache.spark.sql.connector.catalog.TableProvider {
+  import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability}
+  import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReaderFactory, Scan, ScanBuilder}
+  import org.apache.spark.sql.types.{LongType, StructType}
+  import org.apache.spark.sql.util.CaseInsensitiveStringMap
+
+  private val tableSchema = new StructType().add("id", LongType)
+  override def inferSchema(options: CaseInsensitiveStringMap): StructType = tableSchema
+  override def getTable(schema: StructType, partitioning: Array[org.apache.spark.sql.connector.expressions.Transform],
+                        properties: java.util.Map[String, String]): Table =
+    new Table with SupportsRead {
+      override def name(): String = "unpushed"
+      override def schema(): StructType = tableSchema
+      override def capabilities(): java.util.Set[TableCapability] =
+        java.util.EnumSet.of(TableCapability.BATCH_READ)
+      override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
+        () => new Scan with Batch {
+          override def readSchema(): StructType = tableSchema
+          override def description(): String =
+            "DataFilters: [(id#0L > 1)]\nPushedFilters: []"
+          override def toBatch: Batch = this
+          override def planInputPartitions(): Array[InputPartition] = Array.empty
+          override def createReaderFactory(): PartitionReaderFactory =
+            (_: InputPartition) => throw new UnsupportedOperationException("no partitions")
+        }
+    }
 }

@@ -33,6 +33,35 @@ class StreamingSpec extends SparkSpec {
     result.columns should contain("__timestamp")
   }
 
+  test("a second drain of an equal file-stream query compiles no new class") {
+    // a streaming query runs on a clone of its session; the clone shares
+    // the executor class loader, so the codegen cache serves the second drain
+    implicit val s = spark
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val in = tmpDir("drain2in")
+    writeFile(in, "a.csv", "1,alpha\n2,beta\n3,gamma")
+    def drain(): Long = {
+      val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val ctx = new JobContext(PipelineContext())
+      val df = new FileStreamReader()
+        .sourceFormat("csv").ddlSchemaString("id int, name string").fileUri(in)
+        .run(ctx).get
+      ctx.promoteView("drain2_v",
+        df.filter("id > 1").selectExpr("id * 2 AS id2", "upper(name) AS name"), global = false)
+      val out = tmpDir("drain2out")
+      new FileStreamWriter()
+        .sinkFormat("parquet").fileUri(out).sourceView("drain2_v")
+        .writeOption("checkpointLocation", tmpDir("drain2ckpt"))
+        .withTrigger("once")
+        .testWaitTimeMs(30000)
+        .run(ctx)
+      spark.read.parquet(out).count() shouldBe 2
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
+    }
+    drain() should be > 0L
+    drain() shouldBe 0L
+  }
+
   test("stateful aggregation resumes from checkpoint across restarts") {
     // Two-phase drain over one checkpoint: phase 2 must see phase 1's agg
     // state (and skip its already-committed input) — if recovery dropped
