@@ -1,7 +1,10 @@
 package graft.ml
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import graft.utils.LocalFrames
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /**
  * Large-scale document deduplication operators: exact, MinHash+LSH, SimHash,
@@ -264,7 +267,7 @@ object Dedup {
    */
   def lshMatches(newSigs: DataFrame, indexSigs: DataFrame, numHashes: Int = 8,
                  bands: Int = 4, minEstJaccard: Double = 0.5,
-                 broadcastBatchMaxRows: Long = 1L << 18): DataFrame =
+                 broadcastBatchMaxRows: Long = LocalFrames.MaxRows): DataFrame =
     bandPairs(bandSignatures(newSigs, numHashes, bands),
       bandSignatures(indexSigs, numHashes, bands), numHashes, bands,
       minEstJaccard, ordered = lit(false), pinA = fitsBroadcast(newSigs, broadcastBatchMaxRows))
@@ -800,7 +803,7 @@ object Dedup {
    *  its weighted frame. A frame the caller will read on the driver
    *  anyway needs no probe: [[localSignatures]]' bounded collect is the
    *  read and the size check in one action. */
-  def maybeBroadcast(df: DataFrame, maxRows: Long = 1L << 18): DataFrame =
+  def maybeBroadcast(df: DataFrame, maxRows: Long = LocalFrames.MaxRows): DataFrame =
     if (fitsBroadcast(df, maxRows)) broadcast(df) else df
 
   /** The bounded limit+count probe behind [[maybeBroadcast]] and
@@ -813,44 +816,31 @@ object Dedup {
 
   /** A batch's (id, mh0..mh{k-1}) signature rows, read to the driver when
    *  the frame holds at most `maxRows` rows; `None` over the bound (and
-   *  always when `maxRows` is 0). One bounded `limit(maxRows + 1)`
-   *  collect is both the read and the broadcast-size probe, so a batch
-   *  over the bound never reaches the driver past that limit — and a
-   *  batch under it reaches the driver anyway when it is broadcast.
+   *  always when `maxRows` is 0). One bounded [[graft.utils.LocalFrames.collect]]
+   *  is both the read and the broadcast-size probe, so a batch over the
+   *  bound never reaches the driver past that limit — and a batch under
+   *  it reaches the driver anyway when it is broadcast.
    *  Rows sharing an id merge by element-wise min: the MinHash of a
    *  union of shingle sets is the element-wise min of the per-set
    *  MinHashes, so a per-row frame ([[minHashSignaturesInline]])
    *  merges to exactly [[minHashSignatures]]' group-by-id result.
-   *  Sorted by id. */
+   *  Sorted by id; [[signatureSchema]] is their schema. */
   private[graft] def localSignatures(sigs: DataFrame, numHashes: Int,
-                                     maxRows: Long): Option[Seq[Row]] =
-    if (maxRows <= 0) None
-    else {
-      val probe = math.min(maxRows, (Int.MaxValue - 1).toLong).toInt
-      val rows = sigs.filter(col("id").isNotNull)
-        .select(col("id").cast("long") +: (0 until numHashes).map(j => col(s"mh$j").cast("long")): _*)
-        .limit(probe + 1).collect()
-      if (rows.length > maxRows) None
-      else {
-        val merged = collection.mutable.HashMap.empty[Long, Array[Long]]
-        rows.foreach { r =>
-          val sig = merged.getOrElseUpdate(r.getLong(0), Array.fill(numHashes)(Long.MaxValue))
-          (0 until numHashes).foreach(j => sig(j) = math.min(sig(j), r.getLong(j + 1)))
-        }
-        Some(merged.toSeq.sortBy(_._1).map { case (id, sig) =>
-          Row.fromSeq(id +: sig.toSeq) })
+                                     maxRows: Long): Option[Seq[InternalRow]] =
+    LocalFrames.collect(sigs.filter(col("id").isNotNull)
+        .select(col("id").cast("long") +: (0 until numHashes).map(j => col(s"mh$j").cast("long")): _*),
+      maxRows).map { rows =>
+      val merged = collection.mutable.HashMap.empty[Long, Array[Long]]
+      rows.foreach { r =>
+        val sig = merged.getOrElseUpdate(r.getLong(0), Array.fill(numHashes)(Long.MaxValue))
+        (0 until numHashes).foreach(j => sig(j) = math.min(sig(j), r.getLong(j + 1)))
       }
+      merged.toSeq.sortBy(_._1).map { case (id, sig) => InternalRow.fromSeq(id +: sig.toSeq) }
     }
 
-  /** [[localSignatures]]' rows as a driver-local frame (a `LocalRelation`):
-   *  no lineage, so reading it again re-runs nothing upstream and it
-   *  needs no cut, persist or probe. */
-  private[graft] def localFrame(spark: org.apache.spark.sql.SparkSession,
-                                rows: Seq[Row], numHashes: Int): DataFrame = {
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    spark.createDataFrame(java.util.Arrays.asList(rows: _*), StructType(
-      ("id" +: (0 until numHashes).map(j => s"mh$j")).map(StructField(_, LongType, nullable = false))))
-  }
+  /** The (id, mh0..mh{k-1}) schema of [[localSignatures]]' rows. */
+  private[graft] def signatureSchema(numHashes: Int): StructType = StructType(
+    ("id" +: (0 until numHashes).map(j => s"mh$j")).map(StructField(_, LongType, nullable = false)))
 
   /** Keep-list from candidate pairs: every id in a duplicate cluster mapped
    *  to the cluster's min id (`keep_id`); `is_duplicate` marks losers.
@@ -1080,7 +1070,7 @@ object Dedup {
    * checkpoint), and each consumption would re-run the banded index
    * join. Batch-neighborhood-sized — the same localCheckpoint discipline
    * as [[clusterLabels]]. Both join sides read `sigs`: pass a local frame
-   * ([[localFrame]]) or a materialized one.
+   * ([[graft.utils.LocalFrames.frame]]) or a materialized one.
    */
   private[graft] def batchEdges(sigs: DataFrame, pinBatch: Boolean, indexBands: DataFrame,
       retained: Option[DataFrame], numHashes: Int, bands: Int,
@@ -1118,14 +1108,14 @@ object Dedup {
   def resolveUpdate(labels: DataFrame, indexSigs: DataFrame, newSigs: DataFrame,
                     numHashes: Int = 8, bands: Int = 4,
                     minEstJaccard: Double = 0.5, iterations: Int = 8,
-                    broadcastBatchMaxRows: Long = 1L << 18): DataFrame = {
+                    broadcastBatchMaxRows: Long = LocalFrames.MaxRows): DataFrame = {
     // The index side is read once, by the band join. A batch within the
     // bound is read once, to the driver, and joins as a local frame.
     def edges(sigs: DataFrame, pin: Boolean) =
       batchEdges(sigs, pin, bandSignatures(indexSigs, numHashes, bands), None,
         numHashes, bands, minEstJaccard, maxCandidatesPerDoc = 0)
     val newEdges = localSignatures(newSigs, numHashes, broadcastBatchMaxRows) match {
-      case Some(rows) => edges(localFrame(newSigs.sparkSession, rows, numHashes), pin = true)
+      case Some(rows) => edges(LocalFrames.frame(newSigs.sparkSession, signatureSchema(numHashes), rows), pin = true)
       case None =>
         // over the bound both join sides read the batch subtree: persist
         // it once. The eager edge cut materializes every consumer, so the
@@ -1491,7 +1481,7 @@ object Dedup {
 final class SoftDedupGate(labels: DataFrame, indexSigs: DataFrame,
     numHashes: Int = 8, shingleLen: Int = 3, bands: Int = 4,
     minEstJaccard: Double = 0.5, iterations: Int = 8,
-    broadcastBatchMaxRows: Long = 1L << 18,
+    broadcastBatchMaxRows: Long = LocalFrames.MaxRows,
     maxCandidatesPerDoc: Int = 0) extends Serializable {
   import org.apache.spark.sql.functions.col
   // the index side is fixed for the gate's life: cut it once, here, in
@@ -1504,7 +1494,7 @@ final class SoftDedupGate(labels: DataFrame, indexSigs: DataFrame,
   private var edgeParts: List[DataFrame] = Nil
   // retained signatures: `heldRows` on the driver (`held` is their local
   // frame), `cutParts` in executor storage
-  private var heldRows: Vector[Row] = Vector.empty
+  private var heldRows: Vector[InternalRow] = Vector.empty
   private var held: Option[DataFrame] = None
   private var cutParts: List[DataFrame] = Nil
 
@@ -1520,9 +1510,10 @@ final class SoftDedupGate(labels: DataFrame, indexSigs: DataFrame,
         numHashes, broadcastBatchMaxRows) match {
       case Some(rows) =>
         val spark = batch.sparkSession
-        edgeParts ::= edges(Dedup.localFrame(spark, rows, numHashes), pin = true)
+        val schema = Dedup.signatureSchema(numHashes)
+        edgeParts ::= edges(LocalFrames.frame(spark, schema, rows), pin = true)
         heldRows ++= rows
-        val all = Dedup.localFrame(spark, heldRows, numHashes)
+        val all = LocalFrames.frame(spark, schema, heldRows)
         if (heldRows.size > broadcastBatchMaxRows) {
           cutParts ::= all.localCheckpoint(true)
           heldRows = Vector.empty

@@ -110,7 +110,7 @@ class DedupActor extends Actor {
   // read to the driver by one bounded collect and broadcast; over it the
   // joins fall back to shuffles. The stream gate also caps its
   // driver-held retained signatures at this many rows
-  protected var broadcastMaxRows: Long = 1L << 18
+  protected var broadcastMaxRows: Long = graft.utils.LocalFrames.MaxRows
   // stream-gate per-document candidate budget (0 = unlimited): d28's
   // device applied to each micro-batch's pairs — bounds the per-batch
   // fold cost when banded chance collisions densify at corpus scale

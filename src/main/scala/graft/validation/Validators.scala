@@ -1,8 +1,11 @@
 package graft.validation
 
 import graft.core.{Actor, JobContext}
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, lit}
+import graft.utils.LocalFrames
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeRow}
+import org.apache.spark.sql.functions.{col, expr, lit}
 import org.apache.spark.sql.types.StructType
 
 /**
@@ -87,6 +90,19 @@ class SchemaValidator extends Actor {
  *
  * Reference: validation/SqlDataValidator.scala:36-66 (filter + negation
  * :42-46, actions error/staging/ignore :47-58).
+ *
+ * `error` and `staging` read a batch view once: one bounded collect of
+ * the view with its validity flag ([[graft.utils.LocalFrames.collect]]).
+ * Within the bounds the invalid rows are counted (or staged) from the
+ * rows read, and the valid rows go downstream as a one-partition local
+ * frame, so the writer re-runs nothing upstream and writes one file per
+ * output as the lazy path does for a small view. The bounds are
+ * [[graft.utils.LocalFrames.MaxRows]] rows and the session's
+ * `spark.sql.autoBroadcastJoinThreshold` bytes (the size it already holds
+ * on the driver for a broadcast; -1 turns the local read off). Over
+ * either bound the view takes the lazy path: the invalid side is counted
+ * (or staged) by its own action and the downstream reads the view again.
+ * `ignore` and streaming views always take the lazy path.
  */
 class SqlDataValidator extends Actor {
   protected var view: String = ""
@@ -132,11 +148,10 @@ class SqlDataValidator extends Actor {
     // null-safe split: a row where the predicate evaluates to NULL (e.g.
     // `amount > 0` with NULL amount) counts as INVALID, not dropped —
     // coalesce(p, false) makes valid ∪ invalid = all rows.
-    val valid = df.filter(s"coalesce(($validPred), false)")
-    val invalid = df.filter(s"not coalesce(($validPred), false)")
-    action match {
+    val isValid = s"coalesce(($validPred), false)"
+    def onInvalid(invalid: => DataFrame, count: => Long): Unit = action match {
       case "error" =>
-        val n = invalid.count()
+        val n = count
         if (n > 0) throw new IllegalStateException(
           s"SqlDataValidator: $n invalid row(s) in view '$view' (predicate: $validPred)")
       case "staging" =>
@@ -146,6 +161,43 @@ class SqlDataValidator extends Actor {
           .option("header", "true").save(uri)
       case "ignore" => ()
     }
-    Some(valid)
+    (if (action == "ignore" || df.isStreaming) None else readLocal(df, isValid)) match {
+      case Some((valid, invalid)) =>
+        def frame(rows: Seq[InternalRow]) = LocalFrames.frame(spark, df.schema, rows).coalesce(1)
+        onInvalid(frame(invalid), invalid.size.toLong)
+        Some(frame(valid))
+      case None =>
+        val invalid = df.filter(s"not $isValid")
+        onInvalid(invalid, invalid.count())
+        Some(df.filter(isValid))
+    }
+  }
+
+  /** `df`'s (valid, invalid) rows from one bounded read of `df` with the
+   *  flag `isValid` as a last column, or None when the view is over
+   *  [[LocalFrames.MaxRows]] rows or the broadcast threshold's bytes. The
+   *  collect's row limit keeps the read within the threshold at the
+   *  schema's default row size, so a view with many columns stops at
+   *  the limit, well below `spark.driver.maxResultSize`; the rows read
+   *  are then checked by their actual size. */
+  private def readLocal(df: DataFrame, isValid: String)(
+      implicit spark: SparkSession): Option[(Seq[InternalRow], Seq[InternalRow])] = {
+    val maxBytes = GraftSqlBridge.broadcastThreshold(spark)
+    val flagged = df.select(col("*"), expr(isValid))
+    val rowBytes = flagged.schema.defaultSize.toLong
+    val flag = df.schema.length
+    def size(r: InternalRow): Long = r match {
+      case u: UnsafeRow => u.getSizeInBytes.toLong
+      case _ => rowBytes
+    }
+    LocalFrames.collect(flagged, math.min(LocalFrames.MaxRows, maxBytes / rowBytes))
+      .filter(_.iterator.map(size).sum <= maxBytes)
+      .map { rows =>
+        val types = df.schema.fields.map(_.dataType)
+        def unflagged(r: InternalRow): InternalRow =
+          new GenericInternalRow(Array.tabulate[Any](flag)(i => r.get(i, types(i))))
+        val (valid, invalid) = rows.toSeq.partition(_.getBoolean(flag))
+        (valid.map(unflagged), invalid.map(unflagged))
+      }
   }
 }

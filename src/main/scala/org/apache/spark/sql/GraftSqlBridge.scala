@@ -1,7 +1,12 @@
 package org.apache.spark.sql
 
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.types.StructType
 
 /**
  * Minimal bridge to the package-private Column <-> Expression converters,
@@ -49,6 +54,25 @@ object GraftSqlBridge {
   def onSession(spark: SparkSession, df: DataFrame): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession],
       df.queryExecution.analyzed)
+
+  /** `df`'s rows as the collect decodes them (`UnsafeRow`s, so each
+   *  knows its size in bytes), not converted to `Row`s. One collect
+   *  action, tracked as one SQL execution, as `Dataset.collect` is. */
+  def collectInternal(df: DataFrame): Array[InternalRow] = {
+    val qe = df.queryExecution
+    SQLExecution.withNewExecutionId(qe, Some("collect"))(qe.executedPlan.executeCollect())
+  }
+
+  /** `rows` as a driver-local frame: a `LocalRelation` with `schema`'s
+   *  columns. */
+  def localRelation(spark: SparkSession, schema: StructType, rows: Seq[InternalRow]): DataFrame =
+    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession],
+      LocalRelation(DataTypeUtils.toAttributes(schema), rows))
+
+  /** The session's `spark.sql.autoBroadcastJoinThreshold` in bytes (-1
+   *  when broadcasting is off). */
+  def broadcastThreshold(spark: SparkSession): Long =
+    spark.asInstanceOf[classic.SparkSession].sessionState.conf.autoBroadcastJoinThreshold
 
   /** Register a temp SQL function backed by a raw Expression builder. */
   def registerFunction(spark: SparkSession, name: String,

@@ -261,6 +261,18 @@ class GuardRailSpec extends SparkSpec {
     Launcher.sparkConfs(Map(Sessions.ArtifactIsolation -> "true"))(Sessions.ArtifactIsolation) shouldBe "true"
   }
 
+  test("one driver-local row bound: graft.utils.LocalFrames.MaxRows") {
+    // every frame read to the driver and every ingest-shaped broadcast
+    // takes its default bound from one constant
+    val literal = "1L << " + "18"
+    val (helper, others) = sourceOffenders("src/main/scala", "")((_, l) => l.contains(literal))
+      .partition(_.startsWith("src/main/scala/graft/utils/LocalFrames.scala:"))
+    withClue("driver-local row bound written as a literal (use LocalFrames.MaxRows): ") {
+      others shouldBe empty
+    }
+    helper should have size 1
+  }
+
   test("every sub-session comes from graft.Sessions.subSession") {
     // a sub-session made elsewhere would get its own executor class loader
     // and recompile every generated class its plans use

@@ -121,6 +121,85 @@ class PipelineRunnerSpec extends SparkSpec {
     spark.catalog.dropGlobalTempView("tw_sum")
   }
 
+  test("an error validator reads its view once: the writer scans no input again") {
+    // own input directories, so their scans are told apart from other
+    // suites' work on the shared tables
+    val in = tmpDir("vonce")
+    spark.read.parquet(s"$sfDir/lineitem.parquet").write.parquet(s"$in/li")
+    spark.read.parquet(s"$sfDir/part.parquet").write.parquet(s"$in/part")
+    val out = tmpDir("vonce_out") + "/brands"
+    val pipeline = Pipeline("vonce", Seq(Job("j", Seq(
+      Action("read_li", new FileReader().sourceFormat("parquet").fileUri(s"$in/li"), Some(View("vo_li"))),
+      Action("read_part", new FileReader().sourceFormat("parquet").fileUri(s"$in/part"), Some(View("vo_part"))),
+      Action("revenue", new SqlTransformer().sqlString(
+        "select p_brand, count(*) as n, sum(l_extendedprice) as rev " +
+          "from vo_li join vo_part on l_partkey = p_partkey group by p_brand"),
+        Some(View("vo_rev"))),
+      Action("positive", new graft.validation.SqlDataValidator().sourceView("vo_rev")
+        .whereValid("rev > 0"), Some(View("vo_ok"))),
+      Action("write", new graft.sink.FileWriter().sinkFormat("parquet")
+        .fileUri(out).sourceView("vo_ok"), None)))))
+    // jobs, SQL executions and input scans of this test's tagged work
+    val tag = "validated-pipeline-pin"
+    val counts = new java.util.concurrent.ConcurrentHashMap[String, Int]()
+    def scans(p: org.apache.spark.sql.execution.SparkPlanInfo): Int =
+      (if (p.nodeName.startsWith("Scan parquet") &&
+           p.metadata.get("Location").exists(_.contains("vonce"))) 1 else 0) +
+        p.children.map(scans).sum
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.job.tags", "")
+            .split(",").contains(tag))) counts.merge("jobs", 1, Integer.sum)
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
+        case x: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+            if x.jobTags.contains(tag) =>
+          counts.merge("sql", 1, Integer.sum)
+          counts.merge("scans", scans(x.sparkPlanInfo), Integer.sum)
+        case _ =>
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    spark.sparkContext.addJobTag(tag)
+    try new PipelineRunner(PipelineContext()).run(pipeline)(spark)
+    finally {
+      spark.sparkContext.removeJobTag(tag)
+      org.apache.spark.ListenerDrain(spark.sparkContext)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    def c(k: String): Int = counts.getOrDefault(k, 0)
+    // each input directory is scanned once, by the validator's bounded
+    // collect; the write reads the validated rows as a local frame.
+    // Jobs: a schema inference per reader, the collect's stages, the
+    // write. SQL executions: four view registrations, the collect, the
+    // write.
+    c("scans") shouldBe 2
+    (c("jobs"), c("sql")) shouldBe ((7, 8))
+    val written = spark.read.parquet(out)
+    written.count() shouldBe spark.read.parquet(s"$in/part").select("p_brand").distinct().count()
+    written.filter("rev <= 0").count() shouldBe 0
+    // one partition in, one file out
+    new java.io.File(out).listFiles().count(_.getName.endsWith(".parquet")) shouldBe 1
+  }
+
+  test("an error validator fails before an overwrite writer touches its target") {
+    import spark.implicits._
+    val target = tmpDir("vkeep") + "/out"
+    Seq(1L, 2L, 3L).toDF("v").write.parquet(target)
+    val pipeline = Pipeline("vkeep", Seq(Job("j", Seq(
+      readerAction("vk_region", "region.parquet"),
+      Action("shift", new SqlTransformer().sqlString(
+        "select cast(r_regionkey as bigint) - 1 as v from vk_region"), Some(View("vk_v"))),
+      Action("check", new graft.validation.SqlDataValidator().sourceView("vk_v")
+        .whereValid("v >= 0"), Some(View("vk_ok"))),
+      Action("write", new graft.sink.FileWriter().sinkFormat("parquet")
+        .fileUri(target).sourceView("vk_ok"), None)))))
+    val e = intercept[IllegalStateException] {
+      new PipelineRunner(PipelineContext()).run(pipeline)(spark)
+    }
+    e.getMessage should include("1 invalid row(s) in view 'vk_v'")
+    spark.read.parquet(target).as[Long].collect().sorted shouldBe Array(1L, 2L, 3L)
+  }
+
   test("global views cross job sub-sessions, local views do not") {
     val probe = new Actor {
       var sawGlobal = false
